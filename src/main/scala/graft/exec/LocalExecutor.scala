@@ -2,22 +2,35 @@ package graft.exec
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Observation, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 import graft.fingerprints.Fingerprint
-import graft.graph.{Backend, GraphSnapshot, ProducerBinding}
+import graft.graph.{Artifact, Backend, GraphSnapshot, ProducerBinding, Statistics}
 import graft.io.IO
 import graft.storage.StoragePartition
 
 /** Per-producer build accounting, used by tests and the incremental-build
-  * queries to prove skip-if-built behavior. */
-/** `validationFailures` is populated only on the failure path: a non-empty
-  * list aborts `build` with an IllegalStateException carrying the messages,
-  * so reports RETURNED by build always have it empty. */
+  * queries to prove skip-if-built behavior. `validationFailures` is
+  * populated only on the failure path: a non-empty list aborts `build` with
+  * an IllegalStateException carrying the messages, so reports RETURNED by
+  * build always have it empty. */
 final case class BuildReport(built: Map[String, Int], skipped: Map[String, Int], validationFailures: Seq[String]) {
   def totalBuilt: Int = built.values.sum
   def totalSkipped: Int = skipped.values.sum
 }
+
+/** One output of a partition build after its write: staged outputs carry
+  * their staging path, bucketed ones (written in place) do not; an
+  * observed write carries the observation holding its profile. */
+private final case class StagedOutput(
+    key: String,
+    artifact: Artifact,
+    schema: StructType,
+    part: StoragePartition,
+    staging: Option[String],
+    parentPreExisting: Boolean,
+    observation: Option[Observation])
 
 /** The incremental topo-order executor
   * (reference: src/arti/executors/local.py:22-57 + executors/__init__.py:22-106):
@@ -157,7 +170,7 @@ final class LocalExecutor(backend: Backend,
               // added after a stats-less build force a rebuild/error
               // instead of silently bypassing the quality gate
               parts.map(p => stored.getOrElse(p.path, Map.empty[String, String]))
-                .flatMap(st => graft.graph.Statistics.checkThresholds(producer.thresholds, st).left.toOption)
+                .flatMap(st => Statistics.checkThresholds(producer.thresholds, st).left.toOption)
             }
           if (thresholdFailures.nonEmpty)
             failures += s"${producer.name}: ${thresholdFailures.mkString("; ")}"
@@ -176,14 +189,15 @@ final class LocalExecutor(backend: Backend,
           require(outputs.size == outputKeys.size,
             s"producer '${producer.name}' returned ${outputs.size} outputs for ${outputKeys.size} declared")
           // WRITE-AUDIT-PUBLISH: each output plan executes exactly ONCE —
-          // into a staging path next to its final location. Validation and
-          // statistics then run over the MATERIALIZED staged bytes (a file
-          // scan, not a re-execution of the producer plan — the old path
-          // recomputed the plan up to 3×: validate, profile, write), and
-          // only a passing gate publishes staging → final with a metadata
-          // rename. A failing gate deletes staging: no byte ever appears
-          // at an artifact path past a failing gate, and validation audits
-          // exactly what was written, not a recomputation of it.
+          // into a staging path next to its final location. Statistics are
+          // OBSERVED on that write (Dataset.observe: the profile's
+          // aggregates ride the write job, no profiling pass of their own);
+          // validation then audits the MATERIALIZED staged bytes (a file
+          // scan, not a re-execution of the producer plan), thresholds gate
+          // on the observed profile, and only a passing gate publishes
+          // staging → final with a metadata rename. A failing gate deletes
+          // staging: no byte ever appears at an artifact path past a
+          // failing gate, and validation audits exactly what was written.
           // Bucketed cluster_by outputs cannot stage (their identity lives
           // in the catalog, not just the path), so the no-write-past-a-
           // failing-gate contract is preserved the OLD way for them:
@@ -211,25 +225,29 @@ final class LocalExecutor(backend: Backend,
           // the plan re-executes once for the gate, once for the write —
           // the same cost shape as the pre-WAP path this preserves.
           val prePlanProfiles: Seq[Option[Map[String, String]]] =
-            if (anyBucketed && wantStats) outputs.map(df => Some(graft.graph.Statistics.profile(df)))
+            if (anyBucketed && wantStats) outputs.map(df => Some(Statistics.profile(df)))
             else planned.map(_ => None)
           val preGate: Either[String, Unit] =
             if (!anyBucketed) Right(())
             else producer.validateOutputs(outputs).flatMap { _ =>
               val viol = prePlanProfiles.flatten.flatMap(st =>
-                graft.graph.Statistics.checkThresholds(producer.thresholds, st).left.toOption)
+                Statistics.checkThresholds(producer.thresholds, st).left.toOption)
               if (viol.isEmpty) Right(()) else Left(viol.mkString("; "))
             }
           if (preGate.isLeft) {
             failures += s"${producer.name}: ${preGate.left.getOrElse("")}"
           } else {
+          // audit frames scan the MATERIALIZED staged bytes
+          def auditDf(a: Artifact, schema: StructType, path: String) =
+            IO.read(spark, a.format, a.storage,
+              Seq(StoragePartition(path, outKey)), Some(schema))
           val staged = planned.map { case (k, a, df, part, clusterBy) =>
             if (clusterBy.nonEmpty) {
               graft.util.Timing.timed(s"${producer.name}/$k writeBucketed") {
               IO.writeBucketed(df, a.format, part.path, clusterBy,
                 IO.bucketTableName(g.name, k), overwrite = true)
               }
-              (k, a, df.schema, part, None, false) // validated above; audited below via read
+              StagedOutput(k, a, df.schema, part, None, parentPreExisting = false, None)
             } else {
               val stagingPath = part.path.stripSuffix("/") + "__staging"
               val sp = new org.apache.hadoop.fs.Path(stagingPath)
@@ -239,78 +257,74 @@ final class LocalExecutor(backend: Backend,
               // not just data-free
               val parentPreExisting = sp.getParent == null || fs.exists(sp.getParent)
               fs.delete(sp, true) // stale staging from a crashed run
-              graft.util.Timing.timed(s"${producer.name}/$k stagingWrite") {
-              IO.write(df, a.format, a.storage, part.copy(path = stagingPath), overwrite = true)
+              // Built-in writers run the frame as one Dataset write, so the
+              // profile is observed on it; an extension writer (IO.register)
+              // may not fire the observation, so its staged bytes are
+              // profiled after the write instead.
+              val observation =
+                if (wantStats && !anyBucketed && IO.isBuiltinWrite(a.format, a.storage))
+                  Some(Observation())
+                else None
+              val toWrite = observation.fold(df) { o =>
+                val aggs = Statistics.profileColumns(df.schema)
+                df.observe(o, aggs.head, aggs.tail: _*)
               }
-              (k, a, df.schema, part, Some(stagingPath), parentPreExisting)
+              graft.util.Timing.timed(s"${producer.name}/$k stagingWrite") {
+              IO.write(toWrite, a.format, a.storage, part.copy(path = stagingPath), overwrite = true)
+              }
+              StagedOutput(k, a, df.schema, part, Some(stagingPath), parentPreExisting, observation)
             }
           }
-          def auditDf(a: graft.graph.Artifact, schema: org.apache.spark.sql.types.StructType,
-              path: String) =
-            IO.read(spark, a.format, a.storage,
-              Seq(graft.storage.StoragePartition(path, outKey)), Some(schema))
-          // audit frames scan MATERIALIZED bytes: the staging path for
-          // plain outputs; the already-final path for bucketed ones
-          val auditDfs = staged.map { case (_, a, schema, part, stagingOpt, _) =>
-            auditDf(a, schema, stagingOpt.getOrElse(part.path))
-          }
-          def dropStaging(): Unit = staged.foreach { case (_, _, _, _, stagingOpt, parentPreExisting) =>
-            stagingOpt.foreach { spStr =>
+          def dropStaging(): Unit = staged.foreach { st =>
+            st.staging.foreach { spStr =>
               val p = new org.apache.hadoop.fs.Path(spStr)
               val fs = p.getFileSystem(conf)
               fs.delete(p, true)
-              if (!parentPreExisting && p.getParent != null &&
+              if (!st.parentPreExisting && p.getParent != null &&
                   fs.exists(p.getParent) && fs.listStatus(p.getParent).isEmpty)
                 fs.delete(p.getParent, false)
             }
           }
-          // Post-write audit over materialized bytes. Pure-bucketed
-          // producers already passed the full gate pre-write (re-running it
-          // would double the gate's actions for no additional safety); a
-          // MIXED producer (bucketed + plain outputs) still audits — the
-          // plain outputs' staged bytes deserve the same materialized-bytes
-          // check as a pure-plain producer, so the gate re-runs with audit
-          // frames for staged outputs and plan frames for bucketed ones.
-          val anyStaged = staged.exists(_._5.nonEmpty)
-          // FUSE the audit passes: when both validation and statistics will
-          // scan the same staged bytes, cache the audit frames so the bytes
-          // are read ONCE (validation materializes the cache, profiling
-          // reads it) — at 100 TB the difference between one scan and two
-          // over every freshly-built partition is the WAP tax itself
-          val cacheAudit = !anyBucketed && wantStats
-          if (cacheAudit) auditDfs.foreach(_.persist())
-          try {
+          // Post-write audit over materialized bytes: the staging path for
+          // plain outputs. Pure-bucketed producers already passed the full
+          // gate pre-write (re-running it would double the gate's actions
+          // for no additional safety); a MIXED producer (bucketed + plain
+          // outputs) still audits — the plain outputs' staged bytes deserve
+          // the same materialized-bytes check as a pure-plain producer, so
+          // the gate re-runs with audit frames for staged outputs and plan
+          // frames for bucketed ones.
           val gate = graft.util.Timing.timed(s"${producer.name} auditValidate") {
-            if (!anyBucketed) producer.validateOutputs(auditDfs)
-            else if (anyStaged) producer.validateOutputs(
-              staged.indices.map(i => if (staged(i)._5.isDefined) auditDfs(i) else outputs(i)))
-            else Right(())
+            if (staged.forall(_.staging.isEmpty)) Right(())
+            else producer.validateOutputs(staged.zip(outputs).map { case (st, plan) =>
+              st.staging.fold(plan)(auditDf(st.artifact, st.schema, _))
+            })
           }
           gate match {
             case Left(msg) =>
               dropStaging()
               failures += s"${producer.name}: $msg"
             case Right(()) =>
-              // F38: profile the staged bytes when stats are wanted OR
+              // F38: the profile is recorded when stats are wanted OR
               // thresholds gate the publish; violations abort BEFORE the
               // rename, so nothing is published past a failing threshold.
               // Bucketed producers recorded their profiles pre-write (the
               // plan pass that also fed the threshold gate) — reuse them.
-              val profiles = graft.util.Timing.timed(s"${producer.name} profile") {
-                if (anyBucketed) prePlanProfiles
-                else auditDfs.map(df =>
-                  if (wantStats) Some(graft.graph.Statistics.profile(df)) else None)
-              }
+              val profiles =
+                if (anyBucketed || !wantStats) prePlanProfiles
+                else staged.map(st => Some(st.observation match {
+                  case Some(o) => Statistics.statsOf(o.get)
+                  case None => Statistics.profile(auditDf(st.artifact, st.schema, st.staging.get))
+                }))
               val thresholdFailures =
                 if (anyBucketed) Nil // checked pre-write on the same profiles
                 else profiles.flatten.flatMap(st =>
-                  graft.graph.Statistics.checkThresholds(producer.thresholds, st).left.toOption)
+                  Statistics.checkThresholds(producer.thresholds, st).left.toOption)
               if (thresholdFailures.nonEmpty) {
                 dropStaging()
                 failures += s"${producer.name}: ${thresholdFailures.mkString("; ")}"
               } else {
               graft.util.Timing.timed(s"${producer.name} publish+fingerprint") {
-              staged.zip(profiles).foreach { case ((k, a, _, part, stagingOpt, _), prof) =>
+              staged.zip(profiles).foreach { case (StagedOutput(k, a, _, part, stagingOpt, _, _), prof) =>
                 stagingOpt.foreach { sp =>
                   val fin = new org.apache.hadoop.fs.Path(part.path)
                   val fs = fin.getFileSystem(conf)
@@ -329,7 +343,6 @@ final class LocalExecutor(backend: Backend,
               built(producer.name) += 1
               }
           }
-          } finally if (cacheAudit) auditDfs.foreach(_.unpersist())
           }
         }
       }

@@ -1,15 +1,17 @@
 package graft.graph
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Artifact statistics (reference F38 — the interface the reference only
   * stubs, statistics/__init__.py:60-86, realized as real one-pass
-  * aggregations): per-column count / nulls / distinct / min / max computed
-  * in a single job over the output, recorded by the executor in the backend
-  * alongside the partition (the `Statistic`/`Threshold` hook point of
-  * executors/local.py:26-29). */
+  * aggregations): per-column count / nulls / distinct / min / max, recorded
+  * by the executor in the backend alongside the partition (the
+  * `Statistic`/`Threshold` hook point of executors/local.py:26-29). The
+  * executor observes them on the staging write itself, so a built
+  * partition is profiled without a job of its own; [[profile]] computes
+  * the same map in one standalone job. */
 object Statistics {
 
   /** Declarative quality thresholds over collected statistics (reference
@@ -72,9 +74,14 @@ object Statistics {
     if (violations.isEmpty) Right(()) else Left(violations.mkString("; "))
   }
 
-  /** One-pass profile: one output row; column names are `<col>__<stat>`. */
-  def profile(df: DataFrame): Map[String, String] = {
-    val aggs = df.schema.fields.toSeq.flatMap { f =>
+  /** The profile's aggregates over `schema`, named `<col>__<stat>` (plus
+    * `__rows`): per column count / approx distinct, and min / max (as
+    * strings) for orderable scalar types. Plain aggregates, so they serve
+    * both a standalone pass ([[profile]]) and `Dataset.observe` on the
+    * write that produces the data (the executor's path: statistics of a
+    * freshly built partition cost no extra job). */
+  def profileColumns(schema: StructType): Seq[Column] =
+    schema.fields.toSeq.flatMap { f =>
       val c = col(f.name)
       val base = Seq(
         count(c).as(s"${f.name}__count"),
@@ -86,9 +93,16 @@ object Statistics {
       }
       base ++ ranged
     } :+ count(lit(1)).as("__rows")
+
+  /** The stats map of one evaluated [[profileColumns]] row (an observed
+    * `Observation.get`, or [[profile]]'s collected row). */
+  def statsOf(values: Map[String, Any]): Map[String, String] =
+    values.map { case (k, v) => k -> String.valueOf(v) }
+
+  /** One-pass profile of `df`: one job, one output row. */
+  def profile(df: DataFrame): Map[String, String] = {
+    val aggs = profileColumns(df.schema)
     val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    row.schema.fields.toSeq.zipWithIndex.map { case (f, i) =>
-      f.name -> String.valueOf(row.get(i))
-    }.toMap
+    statsOf(row.getValuesMap[Any](row.schema.fieldNames.toSeq))
   }
 }

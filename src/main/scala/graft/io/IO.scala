@@ -66,12 +66,20 @@ object IO {
     })
 
   def canWrite(format: Format, storage: Storage): Boolean =
-    registered(format, storage).exists(_.writer.isDefined) || (storage match {
-      case _: LiteralStorage => false // literals are read-only
-      // binaryFile is a read-only source
-      case _: FileStorage    => builtinFileFormat(format) && format != Format.Binary
-      case _                 => false
-    })
+    registered(format, storage).exists(_.writer.isDefined) || builtinWritable(format, storage)
+
+  /** True iff [[write]] takes the built-in path for this pair: one
+    * Dataset write action over the frame, so an observation on the frame
+    * (`Dataset.observe`) is fulfilled by the write itself. */
+  def isBuiltinWrite(format: Format, storage: Storage): Boolean =
+    !registered(format, storage).exists(_.writer.isDefined) && builtinWritable(format, storage)
+
+  private def builtinWritable(format: Format, storage: Storage): Boolean = storage match {
+    case _: LiteralStorage => false // literals are read-only
+    // binaryFile is a read-only source
+    case _: FileStorage    => builtinFileFormat(format) && format != Format.Binary
+    case _                 => false
+  }
 
   private def builtinFileFormat(f: Format): Boolean = f match {
     case Format.Json | Format.Parquet | Format.Csv | Format.Text | Format.Binary | Format.Orc => true
@@ -99,7 +107,7 @@ object IO {
           val reader = schema.map(spark.read.schema).getOrElse(spark.read)
           f match {
             case Format.Json    => reader.json(paths: _*)
-            case Format.Parquet => reader.parquet(paths: _*)
+            case Format.Parquet => if (schema.isEmpty) readParquet(spark, paths: _*) else reader.parquet(paths: _*)
             case Format.Csv     => reader.option("header", "true").csv(paths: _*)
             case Format.Text    => reader.text(paths: _*)
             case Format.Orc     => reader.orc(paths: _*)
@@ -108,6 +116,12 @@ object IO {
         case other => throw new IllegalArgumentException(s"no reader registered for $other")
       }
     }
+
+  /** `spark.read.parquet(paths)` with the schema resolved on the driver
+    * from one footer ([[ParquetFooterSchema]]) instead of inside a Spark
+    * job; the same schema, one job fewer per read. */
+  def readParquet(spark: SparkSession, paths: String*): DataFrame =
+    ParquetFooterSchema.infer(spark, paths).fold(spark.read)(spark.read.schema).parquet(paths: _*)
 
   /** Bulk write of a whole partitioned Collection in the engine-native Hive
     * layout (`k=v` directories): one distributed write for every partition

@@ -185,7 +185,7 @@ object FrameworkQueries {
   private def q16(spark: SparkSession, dir: String): DataFrame = {
     val base = tmp()
     // raw partition 0 = the testdata orders; partition 1 arrives later
-    spark.read.parquet(s"$dir/orders.parquet").coalesce(1)
+    Tables(spark, dir, "orders").coalesce(1)
       .write.parquet(s"$base/raw/part-0.parquet")
 
     val rawType = collectionOf[OrderPartRow]("orders", partitionBy = Seq("i"))

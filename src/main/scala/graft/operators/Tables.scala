@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.io.IO
+
 /** Loaders for the driver testdata (TESTDATA.md / FIXTURES.md §A).
   *
   * All timestamps in the parquet files are written with
@@ -24,7 +26,7 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = name match {
     case "events" =>
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = spark.read.parquet(s"$dir/events.parquet")
+      val raw = IO.readParquet(spark, s"$dir/events.parquet")
       raw.schema("ts").dataType match {
         // ns-long division truncates to µs (double division would lose
         // precision — epoch nanos ~1.7e18 exceed 2^53)
@@ -33,7 +35,7 @@ object Tables {
         case TimestampNTZType => raw // already µs-truncated NTZ
         case _ => raw.withColumn("ts", col("ts").cast(TimestampNTZType))
       }
-    case _ => spark.read.parquet(s"$dir/$name.parquet")
+    case _ => IO.readParquet(spark, s"$dir/$name.parquet")
   }
 
   /** `events` with `ts` normalized to ns-since-epoch LongType regardless of
@@ -44,7 +46,7 @@ object Tables {
     * downstream µs conversions agree with the batch reader exactly. */
   def eventsRawNs(spark: SparkSession, dir: String): DataFrame = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/events.parquet")
+    val raw = IO.readParquet(spark, s"$dir/events.parquet")
     raw.schema("ts").dataType match {
       case LongType => raw
       // session timezone is pinned UTC in every entry point, so the

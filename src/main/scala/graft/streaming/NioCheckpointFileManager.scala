@@ -28,8 +28,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   *
   * SEMANTICS (mirrors FileSystemBasedCheckpointFileManager op-for-op):
   * createAtomic writes a dot-prefixed temp file in the target's directory
-  * and atomically renames on close — with overwriteIfPossible=false an
-  * existing target raises hadoop's FileAlreadyExistsException, the signal
+  * and atomically publishes it on close (rename when overwriting, else a
+  * hard link that fails on an existing target, then the temp is removed)
+  * — with overwriteIfPossible=false an existing target raises hadoop's
+  * FileAlreadyExistsException, the signal
   * HDFSMetadataLog's concurrent-writer guard catches; list on a missing
   * directory raises FileNotFoundException like FileSystem.listStatus;
   * delete is recursive and silent on missing paths; createCheckpointDirectory
@@ -117,7 +119,7 @@ class NioCheckpointFileManager(root: Path, conf: Configuration)
   }
 }
 
-/** Write-to-temp, atomic-rename-on-close stream (the RenameBased contract:
+/** Write-to-temp, atomic-publish-on-close stream (the RenameBased contract:
   * close commits, cancel discards, double-close is a no-op, close after
   * cancel must not resurrect the rename). */
 private[streaming] class NioRenameOnCloseStream(out: OutputStream,
@@ -130,18 +132,18 @@ private[streaming] class NioRenameOnCloseStream(out: OutputStream,
     if (!terminated) {
       terminated = true
       out.close()
-      try {
-        if (overwrite)
-          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-            StandardCopyOption.REPLACE_EXISTING)
-        else
-          Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
-      } catch {
-        case _: java.nio.file.FileAlreadyExistsException =>
-          Files.deleteIfExists(tmp)
-          // hadoop's exception type: what HDFSMetadataLog's guard catches
-          throw new FileAlreadyExistsException(
-            s"rename destination $target already exists")
+      if (overwrite)
+        Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
+          StandardCopyOption.REPLACE_EXISTING)
+      else {
+        // ATOMIC_MOVE is rename(2), which silently replaces an existing
+        // target; link(2) is atomic AND fails if the target exists
+        try Files.createLink(target, tmp)
+        catch {
+          case _: java.nio.file.FileAlreadyExistsException =>
+            // hadoop's exception type: what HDFSMetadataLog's guard catches
+            throw new FileAlreadyExistsException(s"destination $target already exists")
+        } finally Files.deleteIfExists(tmp)
       }
       ()
     }

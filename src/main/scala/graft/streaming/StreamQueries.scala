@@ -478,7 +478,7 @@ object StreamQueries {
   private def embWaves(spark: SparkSession, dir: String): String =
     embWaveCache.getOrElseUpdate(dir, {
       val src = graft.util.TempDirs.create("graft-stream-embs")
-      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      val e = graft.operators.Tables(spark, dir, "embeddings")
       for (i <- 0 until 3) {
         e.filter(pmod(xxhash64(col("vec_id")), lit(3)) === i)
           .coalesce(1).write.parquet(src.resolve(s"wave-$i").toString)
@@ -553,7 +553,7 @@ object StreamQueries {
       ivfCellMomentsWide(embStream(spark, dir).filter(isDelta), cents),
       OutputMode.Complete())
     val batch = ivfCellMomentsWide(
-      spark.read.parquet(s"$dir/embeddings.parquet").filter(isDelta), cents)
+      graft.operators.Tables(spark, dir, "embeddings").filter(isDelta), cents)
       .select(col("cent_id").as("b_cid") +: col("delta_cnt").as("b_cnt") +:
         (0 until dim).map(d => col(s"m_$d").as(s"b_m_$d")): _*)
     val m1 = (0 until dim).map(d => col(s"m_$d")).reduce(_ + _)
@@ -852,12 +852,12 @@ object StreamQueries {
   private val joinCdcWaveCache = scala.collection.concurrent.TrieMap.empty[String, String]
 
   private[graft] def joinCdcBatch(spark: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val ord = spark.read.parquet(s"$dir/orders.parquet")
+    val ord = graft.operators.Tables(spark, dir, "orders")
       .select(lit("O").as("side"), col("o_custkey").cast(LongType).as("k"),
         expr("cast(round(o_totalprice * 100, 0) as bigint)").as("cents"),
         lit(null).cast(StringType).as("seg"),
         col("o_orderkey").cast(LongType).as("src_key"))
-    val cust = spark.read.parquet(s"$dir/customer.parquet")
+    val cust = graft.operators.Tables(spark, dir, "customer")
       .select(lit("C").as("side"), col("c_custkey").cast(LongType).as("k"),
         lit(null).cast(LongType).as("cents"), col("c_mktsegment").as("seg"),
         col("c_custkey").cast(LongType).as("src_key"))
@@ -1100,7 +1100,7 @@ object StreamQueries {
       OutputMode.Complete())
     val dec = graft.operators.Queries.compactionDecision(drained)
     val batch = graft.operators.Queries.compactionDecision(ivfCellCodeCounts(
-        spark.read.parquet(s"$dir/embeddings.parquet").filter(col("vec_id") >= 5),
+        graft.operators.Tables(spark, dir, "embeddings").filter(col("vec_id") >= 5),
         qs37Cents))
       .select(col("cent_id").as("b_cid"), col("n_codes").as("b_nc"),
         col("n_tombstoned").as("b_nt"), col("rebuild").as("b_rb"))
@@ -1799,7 +1799,7 @@ object StreamQueries {
   private def docsWaves(spark: SparkSession, dir: String): String =
     docWaveCache.getOrElseUpdate(dir, {
       val src = graft.util.TempDirs.create("graft-stream-docs")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = graft.operators.Tables(spark, dir, "documents")
       for (i <- 0 until 3) {
         docs.filter(pmod(xxhash64(col("doc_id")), lit(3)) === i)
           .coalesce(1).write.parquet(src.resolve(s"wave-$i").toString)
@@ -2571,7 +2571,7 @@ object StreamQueries {
   private def ordersWaves(spark: SparkSession, dir: String): String =
     orderWaveCache.getOrElseUpdate(dir, {
       val src = graft.util.TempDirs.create("graft-stream-orders")
-      val o = spark.read.parquet(s"$dir/orders.parquet")
+      val o = graft.operators.Tables(spark, dir, "orders")
       val cuts = Seq(
         col("o_orderdate") < lit("1996-01-01").cast(TimestampNTZType),
         col("o_orderdate") >= lit("1996-01-01").cast(TimestampNTZType) &&

@@ -108,7 +108,7 @@ class BroadcastInventorySpec extends AnyFunSuite with BeforeAndAfterAll {
     "x14_ann_ivf" -> (5, "k=16 centroid frames + 5-row query frame + 5x16 query-centroid dots"),
     "x157_ivf_tombstone_serve" -> (5, "the x14 serve path verbatim: k=16 centroid frames + 5-row query frame + 5x16 query-centroid dots"),
     "x158_ivf_compaction_audit" -> (1, "k=16 centroid frame (the ivfAssigned broadcast)"),
-    "x160_loo_attribution" -> (3, "|sources|-row LOO smoothing-constant frame + the conf-gated eval-pair/eval-w1 semi-filters (spark.graft.loo.broadcastEvalCap; eval set corpus-constant in production)"),
+    "x160_loo_attribution" -> (5, "|sources|-row LOO smoothing-constant frame + the conf-gated eval-pair/eval-w1 semi-filters (spark.graft.loo.broadcastEvalCap; eval set corpus-constant in production) + two 1-row scalar cross joins: |vocab| (vf) and the full-model baseline (xent_full_nanos), which replaced the former count()/head() driver actions"),
     "x21_sequence_pack" -> (1, "|packs|-row boundary frame"),
     "x27_vocabulary" -> (1, "bounded merge-rule vocabulary table"),
     "x29_quantized_rerank" -> (1, "5-row query frame"),

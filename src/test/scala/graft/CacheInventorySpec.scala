@@ -93,7 +93,9 @@ class CacheInventorySpec extends AnyFunSuite with BeforeAndAfterAll {
     "x145_ranker_tau" -> (1, TF),
     "x44_textrank" -> (2, s"$LEAF (transition frame) + vocab-bounded node frame: 3 consumers (n count, p0, per-round left join); job-boundary release"),
     "x77_dup_pagerank" -> (1, LEAF),
-    "x123_bradley_terry" -> (3, LEAF),
+    // (x123_bradley_terry pins nothing after it materializes: each MM
+    // round's localCheckpoint leaf is released once the next round lands,
+    // and the pair matrix is unpersisted after the last round)
     "x63_source_drift" -> (1, STATS),
     "x64_dataset_card" -> (1, STATS),
     "x155_loss_reweight" -> (1, s"$STATS (inherited from the x63 core it tilts)"),

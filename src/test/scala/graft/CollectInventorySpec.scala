@@ -111,7 +111,8 @@ class CollectInventorySpec extends AnyFunSuite {
     "QueriesText.scala:summary" -> (1, "vocab-bounded Misra-Gries summary row"),
     "QueriesText.scala:st" -> (3, "x151's per-split 1-row (N, sum dl) stat rows + bm25 dl stats (one holder name, three call shapes)"),
     "QueriesText.scala:nTot" -> (1, "1-row token total"),
-    "QueriesText.scala:fullRow" -> (1, "x160's 1-row full-model xent baseline (pinned as a literal so the LOO scoring join never re-derives it)"),
+    // (x160's fullRow scalar is gone: the full-model xent now rides the
+    // plan as a broadcast 1-row frame, enrolled in BroadcastInventorySpec)
     "QueriesText.scala:dupRow" -> (1, "1-row duplicate-mass scalar"),
     "QueriesText.scala:n" -> (1, "1-row corpus count scalar"),
     "QueriesText.scala:wTot" -> (1, "1-row weight total"),
