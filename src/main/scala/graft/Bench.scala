@@ -1,9 +1,38 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
+import graft.tools.Harness
+import graft.util.MiniJson.{JObj, JStr, render}
 object Bench {
+  /** The nearest enclosing directory holding build.sbt (the cwd if none). */
+  private def repoRoot: java.nio.file.Path = {
+    val cwd = java.nio.file.Paths.get("").toAbsolutePath
+    Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
+      .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
+      .getOrElse(cwd)
+  }
+
+  /** (median, max - min) seconds of `reps` timed reps after `warm`
+    * untimed ones. A rep that throws ends the query and reports its time
+    * to failure (build start to the throw, spread 0): never negative, so
+    * a failing query cannot lower `total` below leaving it out. */
+  private[graft] def measure(spark: SparkSession, name: String, warm: Int, reps: Int)(
+      build: () => DataFrame): (Double, Double) = {
+    var repStart = System.nanoTime()
+    try {
+      val times = Harness.timedReps(spark, warm + reps) { () =>
+        repStart = System.nanoTime()
+        build()
+      }.drop(warm).sorted
+      (times(times.size / 2), times.last - times.head)
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] $name failed: ${e.getMessage}")
+      ((System.nanoTime() - repStart) / 1e9, 0.0)
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     // MEDIAN-OF-N protocol (default 3): each query runs N times
     // back-to-back and reports its per-query MEDIAN, so (a) one-time
     // JIT/codegen cost lands in rep 1 and is discounted, and (b) the
@@ -11,24 +40,7 @@ object Bench {
     // cherry-picked best-of runs. Spread (max-min, seconds) is emitted
     // per query so noisy medians are visible.
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      // local-mode knob: sf0.1 parquet files are 2-20 MB, far below the
-      // 128 MB default split size — without this every scan is one task
-      // and 31 of 32 cores idle on the map side. A real cluster with
-      // full-size files keeps the default.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      // shuffle/spill scratch on tmpfs when the host has one (guide §6):
-      // local-mode shuffle files are ephemeral by definition; a cluster
-      // deployment keeps the default (fast local disks sized for spill).
-      // SPARK_GRAFT_LOCAL_DIR overrides; no /dev/shm → Spark's default.
-      .config("spark.local.dir", graft.util.TempDirs.sparkLocalDir)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-bench")
     // untimed warmup: JVM/codegen/parquet-footer caches, so rep 1 of the
     // first measured query isn't charged session bring-up. One
     // representative per machinery family — plain scan/join (q1), kernel
@@ -47,21 +59,6 @@ object Bench {
     // qs spreads that forced window triage in earlier rounds.
     try graft.streaming.StreamQueries.prewarmStreaming(spark, sfDir)
     catch { case _: Throwable => () }
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      spark.catalog.clearCache() // previous rep's persist() outside the timer
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      val t0 = System.nanoTime()
-      // FULL-MATERIALIZATION action (r9 instrument fix): count() lets the
-      // optimizer's distinct-key join elimination DROP whole pipeline legs
-      // — x141's entire span machinery vanished under count (its final
-      // frame left-joins per-doc aggregates whose keys Catalyst proves
-      // unique), timing a 280 MB scan instead of a 30 GB hash pass. The
-      // noop sink computes EVERY output column, exactly what the DuckDB
-      // oracle's fetch pays — symmetric, and un-prunable by construction.
-      try { fn(spark, sfDir).write.format("noop").mode("overwrite").save() }
-      catch { case _: Throwable => () }
-      (System.nanoTime() - t0) / 1e9
-    }
     // dev-only subset knob for targeted perf work (the driver never sets
     // it): SPARK_GRAFT_BENCH_QUERIES=x93_prefix_join,x2_neardup_pairs
     val only = sys.env.get("SPARK_GRAFT_BENCH_QUERIES")
@@ -85,10 +82,9 @@ object Bench {
       // streaming query JITs its own generated code + state-store setup on
       // first execution, which median-of-N discounts but the spread metric
       // showed as multi-second "jitter" that wasn't (r11 What's-wrong #5)
-      if (name.startsWith("qs")) { try once(fn) catch { case _: Throwable => () } }
-      val times = (1 to qReps).map(_ => once(fn)).sorted
-      val median = times(times.size / 2)
-      (name, median, times.last - times.head)
+      val warm = if (name.startsWith("qs")) 1 else 0
+      val (median, spread) = measure(spark, name, warm, qReps)(() => fn(spark, sfDir))
+      (name, median, spread)
     }
     def jnum(d: Double): String = f"$d%.4f"
     val qs = results.map { case (k, m, _) => "\"" + k + "\":" + jnum(m) }.mkString("{", ",", "}")
@@ -108,27 +104,11 @@ object Bench {
     val pairBlock: String =
       if (!sys.env.get("SPARK_GRAFT_BENCH_PAIR").contains("1")) ""
       else try {
-        val repoRoot = {
-          val cwd = java.nio.file.Paths.get("").toAbsolutePath
-          Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
-            .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-            .getOrElse(cwd)
-        }
-        // same escaping contract as Verify.scala's oracle_sql.json dump
-        def jstr(s: String): String = "\"" + s.flatMap {
-          case '"'  => "\\\""
-          case '\\' => "\\\\"
-          case '\n' => "\\n"
-          case '\r' => "\\r"
-          case '\t' => "\\t"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
         val names = selected.map(_._1).toSet
         val oracleSql = SparkEntry.oracleSql.filter(kv => names(kv._1))
         val tmp = java.nio.file.Files.createTempFile("graft_oracle_", ".json")
         java.nio.file.Files.writeString(tmp,
-          oracleSql.map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}"))
+          render(JObj(oracleSql.toSeq.map { case (k, v) => k -> JStr(v) })))
         val cmd = Seq("python3", repoRoot.resolve("tools/duck_bench.py").toString,
           sfDir, tmp.toString, reps.toString)
         val oracleOut = scala.sys.process.Process(cmd).!!
@@ -158,13 +138,7 @@ object Bench {
     // Default path is anchored to the repo root (where build.sbt lives) so
     // a JVM launched from elsewhere doesn't scatter artifacts; the file is
     // gitignored — round closes copy it to BENCH_LOCAL_r{N}.json.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", {
-      val cwd = java.nio.file.Paths.get("").toAbsolutePath
-      val root = Iterator.iterate(cwd)(_.getParent).takeWhile(_ != null)
-        .find(p => java.nio.file.Files.exists(p.resolve("build.sbt")))
-        .getOrElse(cwd)
-      root.resolve("BENCH_LOCAL.json").toString
-    })
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", repoRoot.resolve("BENCH_LOCAL.json").toString)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     // MEASUREMENT-REPORTING FIX (r13, verdict item 1): the full line above

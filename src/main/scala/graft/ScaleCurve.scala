@@ -1,56 +1,42 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.tools.Harness
 
 /** Scale-curve probe (r7 evidence run): times a named subset of the
   * registry at several data directories and prints one JSON line per
-  * (dir, query) — used to measure the sf0.1 → 10× wall-clock ratios for
-  * the dedup/ANN flagships recorded in BASELINE.md. The 10× corpus is
-  * built by `tools/make_scale10.py`: ten vocabulary-disjoint shards,
-  * each a token-bijection image of sf0.1, so per-shard candidate-pair
-  * structure is EXACTLY preserved and total pair volume scales linearly
-  * by construction — the ratio measures the engine, not a data artifact.
+  * (dir, query) with each rep's time and the median — used to measure the
+  * sf0.1 → 10× wall-clock ratios for the dedup/ANN flagships recorded in
+  * BASELINE.md. The 10× corpus is built by `tools/make_scale10.py`: ten
+  * vocabulary-disjoint shards, each a token-bijection image of sf0.1, so
+  * per-shard candidate-pair structure is EXACTLY preserved and total pair
+  * volume scales linearly by construction — the ratio measures the
+  * engine, not a data artifact. Reps: SPARK_GRAFT_BENCH_REPS (default 3).
   *
-  * Usage: runMain graft.ScaleCurve q1,q2,... dir1 dir2 ...
+  * Usage: runMain graft.ScaleCurve q1,q2,... dir1 dir2 ... [key=value ...]
+  *
+  * Trailing key=value args are session confs. At large factors partitions
+  * must scale with the DATA (as a cluster's would), or per-partition
+  * shuffle blocks outgrow memory and the curve measures spill, not the
+  * algorithm: pass spark.sql.shuffle.partitions=N for the 100× point. One
+  * query at one dir times a single query in isolation, e.g.
+  * `runMain graft.ScaleCurve x152_shuffle_quality <sfDir>
+  * spark.graft.shuffleaudit.hexChars=4`.
   */
 object ScaleCurve {
   def main(args: Array[String]): Unit = {
     val names = args(0).split(",").toSeq
-    val dirs = args.drop(1).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val (confs, dirs) = args.toSeq.drop(1).partition(_.contains('='))
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    // at large factors partitions must scale with the DATA (as a cluster's
-    // would), or per-partition shuffle blocks outgrow memory and the curve
-    // measures spill, not the algorithm — override for the 100× point
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session("graft-scalecurve", confs)
     // warmup on the first dir (JIT/codegen; same discipline as Bench)
     try names.foreach(n => SparkEntry.queries(n)(spark, dirs.head).count())
     catch { case _: Throwable => () }
     for (dir <- dirs; name <- names) {
       val fn = SparkEntry.queries(name)
-      val times = (1 to reps).map { _ =>
-        spark.catalog.clearCache()
-        // catalog.clearCache() misses RDD-level persists (x17/x77's
-        // per-round leaves) — drop those too or a multi-query probe at
-        // large factors accumulates rounds × queries of cached blocks
-        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-        val t0 = System.nanoTime()
-        // full materialization (the Bench r9 instrument fix: count() lets
-        // distinct-key join elimination drop pipeline legs — see Bench)
-        fn(spark, dir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
+      val times = Harness.timedReps(spark, reps)(() => fn(spark, dir))
       val med = times.sorted.apply(times.size / 2)
       val rows = fn(spark, dir).count() // untimed; count may legally prune
-      println(f"""SCALECURVE {"dir":"$dir","query":"$name","sec":$med%.3f,"rows":$rows}""")
+      println(f"""SCALECURVE {"dir":"$dir","query":"$name","sec":$med%.3f,""" +
+        s""""times":${times.map(t => f"$t%.3f").mkString("[", ",", "]")},"rows":$rows}""")
     }
     spark.stop()
   }

@@ -1,6 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+
+import graft.tools.Harness
+import graft.util.MiniJson.{JObj, JStr, render}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -10,20 +12,10 @@ object Verify {
     // optional third arg (dev only): comma-separated query-name filter —
     // the driver always runs the full set
     val only: Option[Set[String]] = args.lift(2).map(_.split(",").toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // oracle-parity run marker: operators with oracle-headroom guards
-    // (RankSum's HUGEINT bound) fail loud HERE instead of letting DuckDB
-    // raise a confusing arithmetic error downstream; engine-only runs
-    // without this flag skip those guards (r10 ADVICE).
-    spark.conf.set("spark.graft.verifyMode", "true")
+    // oracle-parity run: operators with oracle-headroom guards (RankSum's
+    // HUGEINT bound) fail loud HERE instead of letting DuckDB raise a
+    // confusing arithmetic error downstream
+    val spark = Harness.session("graft-verify", Seq("spark.graft.ranksum.oracleParityN=250000"))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => only.forall(_.contains(kv._1))).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -33,21 +25,11 @@ object Verify {
       }
       finally spark.catalog.clearCache() // per-query persist() must not leak
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    // MiniJson escapes ALL control chars (<0x20): a tab or CR in an oracle
+    // query would otherwise make the compare's json.load fail
+    val json = JObj(SparkEntry.oracleSql.filter(kv => only.forall(_.contains(kv._1)))
+      .toSeq.map { case (k, v) => k -> JStr(v) })
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), render(json))
     spark.stop()
   }
 }

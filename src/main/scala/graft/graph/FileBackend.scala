@@ -9,8 +9,9 @@ import scala.jdk.CollectionConverters._
 import graft.fingerprints.Fingerprint
 import graft.partitions.PartitionField
 import graft.partitions.PartitionField.{DateField, IntField, NullField}
-import graft.partitions.PartitionKey.PartitionKey
 import graft.storage.StoragePartition
+import graft.util.MiniJson
+import graft.util.MiniJson._
 
 /** Durable metadata backend (reference F37 — the reference ships only the
   * in-memory backend with real stores left TODO, backends/__init__.py:20-23):
@@ -29,100 +30,37 @@ final class FileBackend(dir: String) extends Backend {
   private val mem = new MemoryBackend
   private val lock = new Object
 
-  // ---- tiny JSON codec (flat string maps + typed partition fields) ----
-  private def esc(s: String): String =
-    s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
-  private def jstr(s: String): String = "\"" + esc(s) + "\""
-
-  private def encodeField(f: PartitionField): String = f match {
-    case DateField(d) => s"""{"kind":"date","iso":${jstr(d.toString)}}"""
-    case IntField(v)  => s"""{"kind":"int","value":$v}"""
-    case NullField    => s"""{"kind":"null"}"""
+  // ---- JSON codec (MiniJson): typed partition fields and keys nest as
+  // objects; the model rides as ONE string value (ModelCodec's own JSON) ----
+  private def encodeField(f: PartitionField): J = f match {
+    case DateField(d) => JObj.of("kind" -> JStr("date"), "iso" -> JStr(d.toString))
+    case IntField(v)  => JObj.of("kind" -> JStr("int"), "value" -> JNum(v))
+    case NullField    => JObj.of("kind" -> JStr("null"))
   }
 
-  private def encodeKey(k: PartitionKey): String =
-    k.toSeq.sortBy(_._1).map { case (n, f) => s"${jstr(n)}:${encodeField(f)}" }.mkString("{", ",", "}")
+  private def encodePartition(p: StoragePartition): J = JObj.of(
+    "path" -> JStr(p.path),
+    "key" -> JObj(p.key.toSeq.sortBy(_._1).map { case (n, f) => n -> encodeField(f) }),
+    "input_fp" -> JNum(p.inputFingerprint.key),
+    "content_fp" -> p.contentFingerprint.fold[J](JNull)(fp => JNum(fp.key)))
 
-  private def encodePartition(p: StoragePartition): String =
-    s"""{"path":${jstr(p.path)},"key":${encodeKey(p.key)},"input_fp":${p.inputFingerprint.key},""" +
-      s""""content_fp":${p.contentFingerprint.map(_.key.toString).getOrElse("null")}}"""
+  private def fp(j: J): Fingerprint = Fingerprint(j.num)
 
-  // intentionally small parser: only the JSON this class writes
-  private def parseLine(line: String): Map[String, String] = {
-    // split top-level "k":v pairs of a flat-ish object; nested objects kept raw
-    val m = scala.collection.mutable.Map.empty[String, String]
-    var i = 1 // skip '{'
-    def parseString(from: Int): (String, Int) = {
-      val sb = new StringBuilder
-      var j = from + 1
-      while (line(j) != '"') {
-        if (line(j) == '\\') {
-          line(j + 1) match {
-            case '"'  => sb.append('"'); j += 2
-            case '\\' => sb.append('\\'); j += 2
-            case 'n'  => sb.append('\n'); j += 2
-            case 'u'  => sb.append(Integer.parseInt(line.substring(j + 2, j + 6), 16).toChar); j += 6
-            case c    => sb.append(c); j += 2
-          }
-        } else { sb.append(line(j)); j += 1 }
-      }
-      (sb.toString, j + 1)
-    }
-    def parseValue(from: Int): (String, Int) = line(from) match {
-      case '"' => val (s, e) = parseString(from); (s, e)
-      case '{' =>
-        var depth = 0; var j = from
-        var inStr = false
-        while ({ val c = line(j)
-          if (inStr) { if (c == '\\') j += 1 else if (c == '"') inStr = false }
-          else if (c == '"') inStr = true
-          else if (c == '{') depth += 1
-          else if (c == '}') { depth -= 1 }
-          j += 1
-          depth > 0 }) ()
-        (line.substring(from, j), j)
-      case _ =>
-        var j = from
-        while (j < line.length && line(j) != ',' && line(j) != '}') j += 1
-        (line.substring(from, j), j)
-    }
-    while (i < line.length - 1) {
-      while (i < line.length && (line(i) == ',' || line(i) == ' ')) i += 1
-      if (i >= line.length - 1) return m.toMap
-      val (k, afterK) = parseString(i)
-      val (v, afterV) = parseValue(afterK + 1) // skip ':'
-      m(k) = v
-      i = afterV
-    }
-    m.toMap
+  private def decodeField(j: J): PartitionField = j("kind").str match {
+    case "date" => DateField(LocalDate.parse(j("iso").str))
+    case "int"  => IntField(j("value").num)
+    case "null" => NullField
   }
 
-  private def decodeField(json: String): PartitionField = {
-    val m = parseLine(json)
-    m("kind") match {
-      case "date" => DateField(LocalDate.parse(m("iso")))
-      case "int"  => IntField(m("value").toLong)
-      case "null" => NullField
-    }
-  }
-
-  private def decodeKey(json: String): PartitionKey = {
-    if (json == "{}") Map.empty
-    else parseLine(json).map { case (n, f) => n -> decodeField(f) }
-  }
-
-  private def decodePartition(m: Map[String, String]): StoragePartition =
+  private def decodePartition(j: J): StoragePartition =
     StoragePartition(
-      path = m("path"),
-      key = decodeKey(m("key")),
-      inputFingerprint = Fingerprint(m("input_fp").toLong),
-      contentFingerprint = Option(m("content_fp")).filter(_ != "null").map(s => Fingerprint(s.toLong)))
+      path = j("path").str,
+      key = j("key").obj.map { case (n, f) => n -> decodeField(f) },
+      inputFingerprint = fp(j("input_fp")),
+      contentFingerprint = j("content_fp") match {
+        case JNull => None
+        case v => Some(fp(v))
+      })
 
   // ---- persistence ----
   /** Crash recovery at open: a torn final line (append died before the
@@ -143,8 +81,8 @@ final class FileBackend(dir: String) extends Backend {
     }
   }
 
-  private def append(file: String, line: String): Unit = lock.synchronized {
-    Files.write(root.resolve(file), (line + "\n").getBytes(StandardCharsets.UTF_8),
+  private def append(file: String, record: J): Unit = lock.synchronized {
+    Files.write(root.resolve(file), (MiniJson.render(record) + "\n").getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
@@ -160,11 +98,11 @@ final class FileBackend(dir: String) extends Backend {
   // doesn't parse, or any record that parses but can't apply (missing keys,
   // bad numbers) — is real corruption and must be loud: silently dropping
   // it would lose partition/tag metadata and break memoization.
-  private def replay(file: String)(apply: Map[String, String] => Unit): Unit = {
+  private def replay(file: String)(apply: J => Unit): Unit = {
     val lines = readLines(file)
     for ((l, idx) <- lines.zipWithIndex) {
-      val structural: Option[Map[String, String]] =
-        if (!l.endsWith("}")) None else scala.util.Try(parseLine(l)).toOption
+      val structural: Option[J] =
+        if (!l.endsWith("}")) None else scala.util.Try(MiniJson.parse(l)).toOption
       structural match {
         case Some(m) =>
           scala.util.Try(apply(m)).failed.foreach { e =>
@@ -183,35 +121,33 @@ final class FileBackend(dir: String) extends Backend {
 
   locally {
     LogFiles.foreach(repairTail)
-    replay("graphs.jsonl")(m => mem.writeGraph(m("name"), Fingerprint(m("fp").toLong)))
-    replay("snapshots.jsonl")(m => mem.writeSnapshot(m("graph"), Fingerprint(m("id").toLong)))
-    replay("tags.jsonl")(m => mem.tag(m("graph"), Fingerprint(m("id").toLong), m("tag"), overwrite = true))
+    replay("graphs.jsonl")(m => mem.writeGraph(m("name").str, fp(m("fp"))))
+    replay("snapshots.jsonl")(m => mem.writeSnapshot(m("graph").str, fp(m("id"))))
+    replay("tags.jsonl")(m => mem.tag(m("graph").str, fp(m("id")), m("tag").str, overwrite = true))
     replay("artifact_parts.jsonl")(m =>
-      mem.writeArtifactPartitions(m("artifact"), Seq(decodePartition(parseLine(m("part"))))))
+      mem.writeArtifactPartitions(m("artifact").str, Seq(decodePartition(m("part")))))
     replay("snapshot_parts.jsonl")(m =>
-      mem.linkSnapshotPartitions(Fingerprint(m("snapshot").toLong), m("artifact"),
-        Seq(decodePartition(parseLine(m("part"))))))
-    replay("stats.jsonl")(m => mem.writeStatistics(m("artifact"), m("path"), parseLine(m("stats"))))
-    // model payloads are full JSON (arrays etc.) beyond the tiny flat
-    // parser, so they ride as ONE escaped string value per record and
-    // decode with the real ModelCodec parser; last write per graph wins
-    replay("models.jsonl")(m => mem.writeGraphModel(ModelCodec.decode(m("model"))))
+      mem.linkSnapshotPartitions(fp(m("snapshot")), m("artifact").str, Seq(decodePartition(m("part")))))
+    replay("stats.jsonl")(m =>
+      mem.writeStatistics(m("artifact").str, m("path").str, m("stats").obj.map { case (k, v) => k -> v.str }))
+    // last write per graph wins
+    replay("models.jsonl")(m => mem.writeGraphModel(ModelCodec.decode(m("model").str)))
   }
 
   // ---- Backend contract: write-through to log + memory projection ----
   def writeGraph(name: String, fingerprint: Fingerprint): Unit = {
-    append("graphs.jsonl", s"""{"name":${jstr(name)},"fp":${fingerprint.key}}""")
+    append("graphs.jsonl", JObj.of("name" -> JStr(name), "fp" -> JNum(fingerprint.key)))
     mem.writeGraph(name, fingerprint)
   }
 
   def writeSnapshot(graphName: String, id: Fingerprint): Unit = {
-    append("snapshots.jsonl", s"""{"graph":${jstr(graphName)},"id":${id.key}}""")
+    append("snapshots.jsonl", JObj.of("graph" -> JStr(graphName), "id" -> JNum(id.key)))
     mem.writeSnapshot(graphName, id)
   }
 
   def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = {
     mem.tag(graphName, id, tag, overwrite) // throws on conflict BEFORE logging
-    append("tags.jsonl", s"""{"graph":${jstr(graphName)},"tag":${jstr(tag)},"id":${id.key}}""")
+    append("tags.jsonl", JObj.of("graph" -> JStr(graphName), "tag" -> JStr(tag), "id" -> JNum(id.key)))
   }
 
   def snapshotForTag(graphName: String, tag: String): Option[Fingerprint] =
@@ -219,7 +155,7 @@ final class FileBackend(dir: String) extends Backend {
 
   def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit = {
     parts.foreach(p =>
-      append("artifact_parts.jsonl", s"""{"artifact":${jstr(artifactKey)},"part":${encodePartition(p)}}"""))
+      append("artifact_parts.jsonl", JObj.of("artifact" -> JStr(artifactKey), "part" -> encodePartition(p))))
     mem.writeArtifactPartitions(artifactKey, parts)
   }
 
@@ -228,8 +164,8 @@ final class FileBackend(dir: String) extends Backend {
 
   def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit = {
     parts.foreach(p =>
-      append("snapshot_parts.jsonl",
-        s"""{"snapshot":${snapshotId.key},"artifact":${jstr(artifactKey)},"part":${encodePartition(p)}}"""))
+      append("snapshot_parts.jsonl", JObj.of("snapshot" -> JNum(snapshotId.key),
+        "artifact" -> JStr(artifactKey), "part" -> encodePartition(p))))
     mem.linkSnapshotPartitions(snapshotId, artifactKey, parts)
   }
 
@@ -237,8 +173,8 @@ final class FileBackend(dir: String) extends Backend {
     mem.readSnapshotPartitions(snapshotId, artifactKey)
 
   def writeStatistics(artifactKey: String, partitionPath: String, stats: Map[String, String]): Unit = {
-    val enc = stats.toSeq.sortBy(_._1).map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }.mkString("{", ",", "}")
-    append("stats.jsonl", s"""{"artifact":${jstr(artifactKey)},"path":${jstr(partitionPath)},"stats":$enc}""")
+    append("stats.jsonl", JObj.of("artifact" -> JStr(artifactKey), "path" -> JStr(partitionPath),
+      "stats" -> JObj(stats.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) })))
     mem.writeStatistics(artifactKey, partitionPath, stats)
   }
 
@@ -246,7 +182,7 @@ final class FileBackend(dir: String) extends Backend {
     mem.readStatistics(artifactKey)
 
   def writeGraphModel(model: GraphModel): Unit = {
-    append("models.jsonl", s"""{"graph":${jstr(model.name)},"model":${jstr(ModelCodec.encode(model))}}""")
+    append("models.jsonl", JObj.of("graph" -> JStr(model.name), "model" -> JStr(ModelCodec.encode(model))))
     mem.writeGraphModel(model)
   }
 

@@ -2404,8 +2404,6 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
     // executor loss. Either way, round N−1's leaf blocks are RELEASED as
     // soon as round N materializes (r12 ADVICE: the checkpointed rounds
     // otherwise accumulate for the life of the session).
-    val reliableCut = spark.conf.getOption("spark.graft.reliableLineageCut")
-      .exists(_.toBoolean)
     var releasePrevRound: () => Unit = () => ()
     def mmRound(theta: DataFrame): DataFrame = {
       val denom = sym
@@ -2422,29 +2420,14 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
             |  div (2 * denom) AS DECIMAL(38,0)), CAST(1 AS DECIMAL(38,0)))""".stripMargin))
         .withColumn("ssum", sum(col("thp")).over(wAll))
         .withColumn("kk", count(lit(1)).over(wAll))
-        .select(col("s"), expr(
+        .select(col("s"), col("w"), col("l"), expr(
           """greatest(CAST((2 * thp * kk * 1000000 + ssum)
             |  div (2 * ssum) AS BIGINT), 1L)""".stripMargin).as("th"))
       // materialize the leaf (O(items) rows), then free the PREVIOUS
-      // round's leaf — it was only ever read to build this one. The new
-      // leaf's persisted RDD ids are found by set diff (single-threaded
-      // here; localCheckpoint registers its block-backing RDD the same
-      // way an explicit persist does), because a checkpointed Dataset's
-      // unpersist() is a CacheManager no-op.
-      val sc = spark.sparkContext
-      val before = sc.getPersistentRDDs.keySet
-      val out =
-        if (!reliableCut) outPlan.localCheckpoint(true)
-        else {
-          val rdd = outPlan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
-          val df = spark.createDataFrame(rdd, outPlan.schema)
-          df.count() // eager, matching the checkpoint path
-          df
-        }
-      val mine = sc.getPersistentRDDs.keySet -- before
+      // round's leaf — it was only ever read to build this one
+      val (out, release) = lineageCut(outPlan, eager = true)
       releasePrevRound()
-      releasePrevRound =
-        () => mine.foreach(id => sc.getPersistentRDDs.get(id).foreach(_.unpersist(false)))
+      releasePrevRound = release
       out
     }
     val t0 = items2.withColumn("th", lit(1000000L))
@@ -2453,9 +2436,12 @@ private[operators] trait QueriesCorpus { this: Queries.type =>
     // matrix is dead weight from here (largest of the persisted frames)
     if (releaseMatrix) symAll.unpersist()
     val tN = mmRound(mmRound(mmRound(t1)))
+    // the last round has materialized, and its leaf carries base's w and
+    // l: no later plan reads sym or base, so the caller inherits no pin
+    sym.unpersist()
+    base.unpersist()
     val wr = Window.orderBy(col("theta_ppm").desc, col("supplier").asc)
-    base.join(tN, "s")
-      .select(col("s").as("supplier"), col("w").as("wins"), col("l").as("losses"),
+    tN.select(col("s").as("supplier"), col("w").as("wins"), col("l").as("losses"),
         (col("w") + col("l")).as("n_comp"), col("th").as("theta_ppm"))
       .withColumn("rnk", row_number().over(wr))
   }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.types._
 import org.apache.spark.storage.StorageLevel
 
@@ -110,6 +111,41 @@ private[operators] trait QueriesShared { this: Queries.type =>
     if (pinned.count() <= cap) broadcast(pinned) else pinned.hint("shuffle_hash")
   }
 
+  /** True when `spark.graft.reliableLineageCut=true`: every lineage cut
+    * (iterative round leaves, [[eagerFinish]]) keeps recomputable lineage
+    * instead of localCheckpoint blocks, which are executor-local,
+    * NON-replicated and NON-recomputable — on a cluster with dynamic
+    * allocation or preemptible executors, losing one fails the query
+    * instead of recomputing. Default false: local mode has no executor
+    * loss. */
+  private[graft] def reliableLineageCut(spark: SparkSession): Boolean =
+    spark.conf.getOption("spark.graft.reliableLineageCut").exists(_.toBoolean)
+
+  /** Lineage cut with an exact release handle: `plan`'s rows behind a leaf
+    * plan, so the next iteration's plan starts here, plus a `release` that
+    * unpersists exactly the leaf's own RDD (a checkpointed Dataset's
+    * unpersist() is a CacheManager no-op). Default: localCheckpoint(eager),
+    * whose LogicalRDD's RDD holds the blocks. Under [[reliableLineageCut]]:
+    * a persisted `.rdd` with full lineage re-entered through
+    * createDataFrame, counted when `eager`. The handle holds the RDD
+    * itself, never a getPersistentRDDs set diff: LocalExecutor builds
+    * producers concurrently on one session, and a diff would also catch
+    * and free another query's blocks persisted during the cut. */
+  private[graft] def lineageCut(plan: DataFrame, eager: Boolean): (DataFrame, () => Unit) = {
+    val spark = plan.sparkSession
+    val (leaf, rdd) =
+      if (reliableLineageCut(spark)) {
+        val rows = plan.rdd.persist(StorageLevel.MEMORY_AND_DISK)
+        val df = spark.createDataFrame(rows, plan.schema)
+        if (eager) df.count()
+        (df, rows)
+      } else {
+        val df = plan.localCheckpoint(eager)
+        (df, df.queryExecution.logical.collectFirst { case r: LogicalRDD => r.rdd }.get)
+      }
+    (leaf, () => { rdd.unpersist(blocking = false); () })
+  }
+
   /** THE EAGER-RELEASE FINISH (r10, hoisted from the x137/x143/qs27
     * conversions): materialize `out` ONCE via localCheckpoint(true) —
     * partitions land in the EXECUTORS' block managers, never the driver,
@@ -121,31 +157,21 @@ private[operators] trait QueriesShared { this: Queries.type =>
     * clearCache(). Cost contract: one materialization of `out`, which
     * every consumer (Verify's parquet dump, Bench's noop sink, a
     * production write) was about to pay anyway — the only extra work is
-    * a block re-read (A/B-priced per converted query, BASELINE.md r11:
-    * the ScaleProbes `eagerfinish_ab` probe).
+    * a block re-read (A/B-priced per converted query, BASELINE.md r11).
     *
-    * FAULT-TOLERANCE TRADE-OFF (r10 ADVICE, medium): localCheckpoint
-    * blocks are executor-local, NON-replicated and NON-recomputable —
-    * lineage is truncated, so losing any executor after construction
-    * makes the returned frame unrecoverable (Spark itself warns against
-    * local checkpoints under dynamic allocation). On a cluster with
-    * dynamic allocation or preemptible executors, either set
-    * `spark.graft.eagerFinish.enabled=false` (pins then live until the
-    * session's normal cache clear and the output keeps full lineage) or
-    * front a reliable `spark.checkpoint.dir` write in the consumer.
-    * Construction also transiently holds pins + the checkpointed copy;
-    * for the corpus-scale conversions (x141, x108) that peak is the
-    * price of not leaking the pins to composers. */
-  private[graft] def eagerFinish(out: DataFrame, pinned: DataFrame*): DataFrame = {
-    val enabled = out.sparkSession.conf
-      .getOption("spark.graft.eagerFinish.enabled").forall(_.toBoolean)
-    if (!enabled) out // A/B + dynamic-allocation escape hatch: r9 lifecycle (pins stay until clearCache)
+    * FAULT-TOLERANCE TRADE-OFF (r10 ADVICE, medium): the checkpointed
+    * blocks cannot be recomputed, so under [[reliableLineageCut]] `out` is
+    * returned as is — it keeps full lineage and the pins live until the
+    * session's normal cache clear. Construction also transiently holds
+    * pins + the checkpointed copy; for the corpus-scale conversions (x141,
+    * x108) that peak is the price of not leaking the pins to composers. */
+  private[graft] def eagerFinish(out: DataFrame, pinned: DataFrame*): DataFrame =
+    if (reliableLineageCut(out.sparkSession)) out
     else {
       val done = out.localCheckpoint(true)
       pinned.foreach(_.unpersist(blocking = false))
       done
     }
-  }
 
   /** Membership predicate: every one of the 4 bit positions is set. */
   private[operators] def bloomTest(bloomArr: Array[Long], mBits: Int)(probe: Column): Column = {

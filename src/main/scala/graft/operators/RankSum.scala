@@ -55,18 +55,15 @@ object RankSum {
     // cause. Fail HERE, loud and attributed, at a documented safe bound;
     // engine-only runs on larger eval slices raise the conf knowingly.
     // r11 (ADVICE): the guard fires only when an oracle-parity run is
-    // actually in effect — Verify sets spark.graft.verifyMode=true, and
-    // setting the N conf explicitly opts in — so engine-only production
-    // runs on larger eval slices no longer throw for a bound that exists
-    // purely to pre-empt a confusing DuckDB-side error.
-    val conf = counts0.sparkSession.conf
-    val parityOpt = conf.getOption("spark.graft.ranksum.oracleParityN").map(_.toLong)
-    val parityRun = parityOpt.isDefined ||
-      conf.getOption("spark.graft.verifyMode").exists(_.toBoolean)
-    val parityCap = parityOpt.getOrElse(250000L)
-    require(!parityRun || bigN <= parityCap,
+    // actually in effect — setting spark.graft.ranksum.oracleParityN opts
+    // in, and Verify sets it to 250000 — so engine-only production runs on
+    // larger eval slices never throw for a bound that exists purely to
+    // pre-empt a confusing DuckDB-side error.
+    val parityCap = counts0.sparkSession.conf
+      .getOption("spark.graft.ranksum.oracleParityN").map(_.toLong)
+    require(parityCap.forall(bigN <= _),
       s"rank-sum eval slice N=$bigN exceeds the DuckDB-oracle HUGEINT headroom bound " +
-        s"($parityCap; worst-case z² numerator 3.75e5·N⁶ reaches 2^127 near N≈2.7e5). " +
+        s"(${parityCap.get}; worst-case z² numerator 3.75e5·N⁶ reaches 2^127 near N≈2.7e5). " +
         "Audit a bounded eval slice, or raise spark.graft.ranksum.oracleParityN for " +
         "engine-only runs — the BigInt finisher itself is exact at any N.")
     // K pinned as a literal (the x58 stats pattern); BigInt because

@@ -83,31 +83,28 @@ object StreamQueries {
     * which is exactly right for a bounded correctness drive (the driver
     * hashes the result anyway) and exactly wrong for production — a real
     * deployment writes `parquet`/`kafka`/`foreachBatch` sinks with a
-    * durable checkpointLocation. Nothing outside this harness uses it. */
+    * durable checkpointLocation. Nothing outside this harness uses it.
+    *
+    * The returned frame is the sink's analyzed `MemoryPlan`; its temp view
+    * is dropped before returning, so the sink's rows live exactly as long
+    * as the caller holds the frame, not for the rest of the session. */
   private def runToTable(spark: SparkSession, df: DataFrame, mode: OutputMode): DataFrame = {
     val name = "sink_" + UUID.randomUUID().toString.replace("-", "")
-    // state-store count follows shuffle partitions. Parameterized (r12 opt):
-    // per-partition-per-batch state-store restore/commit carries a fixed
-    // file-churn cost, so the local harness floor scales with this knob —
-    // the qs_floor probe read ~5 s at 4 partitions vs ~2 s at 2 for the
-    // SAME 3-wave drain (32c, sf0.1). Results are partition-count-free by
+    // state-store count follows shuffle partitions: per-partition-per-batch
+    // state-store restore/commit carries a fixed file-churn cost, so 2 is
+    // the measured local sweet spot (r12: ~5 s at 4 partitions vs ~2 s at 2
+    // for the same 3-wave drain). Results are partition-count-free by
     // construction (keyed state is hash-routed; every qs aggregation is
-    // commutative), so 2 is the measured local sweet spot; a real
-    // deployment sizes this to key cardinality × executor count via the
-    // same conf.
+    // commutative).
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2"))
+    spark.conf.set("spark.sql.shuffle.partitions", "2")
     // NIO checkpoint manager (r13, guide §1.2): the checkpoint root below is
     // always a LOCAL TempDirs path, so the per-batch offset/commit/state
-    // file ops skip the Hadoop FS stack (~25-40 ms/op measured → µs). Only
-    // set for the duration of this query and restorable by conf:
-    // spark.graft.stream.nioCheckpointManager=false keeps Spark's default
-    // manager (e.g. to point checkpoints at a non-POSIX root).
+    // file ops skip the Hadoop FS stack (~25-40 ms/op measured → µs). Set
+    // only for the duration of this query.
     val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
     val prevFm = spark.conf.getOption(fmKey)
-    if (spark.conf.getOption("spark.graft.stream.nioCheckpointManager").forall(_.toBoolean))
-      spark.conf.set(fmKey, classOf[NioCheckpointFileManager].getName)
+    spark.conf.set(fmKey, classOf[NioCheckpointFileManager].getName)
     // deleted after termination (r13, ADVICE): a drained AvailableNow query
     // never reuses its checkpoint, and Spark's own implicit temp checkpoints
     // are deleted on stop — without this a multi-query run accumulates
@@ -130,7 +127,9 @@ object StreamQueries {
       }
       graft.util.TempDirs.deleteTree(ckpt)
     }
-    spark.table(name)
+    val out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    out
   }
 
 
@@ -1770,28 +1769,6 @@ object StreamQueries {
     runToTable(spark, joinViewKeyState(joinCdcStream(spark, dir)),
       OutputMode.Complete()).count()
     ()
-  }
-
-  /** Dev probe (ScaleProbes qs_floor): a minimal 3-wave complete-mode drain
-    * through the EXACT runToTable machinery, returning the sink table plus
-    * the per-batch progress breakdown — the instrument for attributing the
-    * streaming family's per-query floor. */
-  private[graft] def probeMinimalDrain(spark: SparkSession, dir: String)
-      : (DataFrame, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]) = {
-    val name = "sink_" + UUID.randomUUID().toString.replace("-", "")
-    val df = docsStream(spark, dir).groupBy(col("lang")).agg(count(lit(1)).as("n"))
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_QS_PARTS",
-        spark.conf.getOption("spark.graft.stream.statePartitions").getOrElse("2")))
-    val q = try {
-      val q0 = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", graft.util.TempDirs.create("graft-ckpt").toString)
-        .outputMode(OutputMode.Complete()).trigger(Trigger.AvailableNow()).start()
-      q0.awaitTermination()
-      q0
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
-    (spark.table(name), q.recentProgress.toSeq)
   }
 
   private val docWaveCache = scala.collection.concurrent.TrieMap.empty[String, String]

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Queries
 
 /** Dev harness: run every BATCH registry query at a small SF and report
@@ -11,19 +9,12 @@ import graft.operators.Queries
 object CacheScan {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-cachescan").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-cachescan")
     val probe = classOf[org.apache.spark.rdd.RDD[_]].getMethod("isLocallyCheckpointed")
     val batch = Queries.all.filterNot(_.name.startsWith("qs"))
     batch.foreach { q =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       try {
+        Harness.clearCaches(spark)
         q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
         val leaked = spark.sparkContext.getPersistentRDDs.values
           .filterNot(r => probe.invoke(r).asInstanceOf[Boolean])

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Queries
 
 /** Dev harness relating each scale-path variant to its exact baseline at
@@ -17,13 +15,7 @@ import graft.operators.Queries
   */
 object EqCheck {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-eqcheck").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-eqcheck")
     for (sf <- args) {
       // x3 vs x2: exact row equality
       val a = Queries.byName("x3_minhash_lsh").run(spark, sf).collect().map(_.toSeq).toSet

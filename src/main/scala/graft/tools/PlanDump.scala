@@ -1,24 +1,17 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.operators.Queries
 
 /** Dev harness: dump `.explain("formatted")` for a comma-separated list of
   * queries into <outDir>/<name>_<suffix>.txt — one JVM for the whole batch
   * (args: <sfDir> <outDir> <suffix> <name1,name2,...>). Batch queries only.
-  * The optimization rounds commit these under plans/r12/ as the judge's
-  * plan-claim evidence. */
+  * The optimization rounds commit these under plans/ as plan-claim
+  * evidence; one name is the plan-audit loop (broadcasts broadcast,
+  * PushedFilters at the scan, WholeStageCodegen over the hot path). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("graft-plandump").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session("graft-plandump")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     for (name <- names.split(',').map(_.trim).filter(_.nonEmpty)) {
       val plan =

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -24,41 +24,20 @@ import graft.operators.Queries
   *   - `x135_exact`  — the same corpus through the default exact leg, for
   *     the same-window cost ratio.
   *
-  * Usage: runMain graft.tools.ScaleProbes <probe> <dir> [reps]
-  * Prints one JSON line; timing protocol matches Bench/ScaleCurve
-  * (median-of-N, noop-sink full materialization, cache clear per rep).
+  * Usage: runMain graft.tools.ScaleProbes <probe> <dir> [reps] [key=value ...]
+  * Prints one JSON line; timing protocol is Bench/ScaleCurve's
+  * `Harness.timedReps` (median-of-N, noop-sink full materialization,
+  * cache clear per rep) except where a probe says otherwise.
   */
 object ScaleProbes {
   def main(args: Array[String]): Unit = {
     val probe = args(0)
     val dir = args(1)
     val reps = if (args.length > 2 && !args(2).contains('=')) args(2).toInt else 3
-    // trailing key=value args become session-build confs (the TimeOne
-    // discipline) — lets a probe A/B hadoop/fs-level settings that must be
-    // present before getOrCreate
-    val extraConfs = args.drop(2).filter(_.contains('=')).map { a =>
-      val Array(k, v) = a.split("=", 2); (k, v)
-    }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val parts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", parts)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-    extraConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    def timed(build: () => DataFrame): Seq[Double] = (1 to reps).map { _ =>
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-      val t0 = System.nanoTime()
-      build().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
+    // trailing key=value args become session-build confs — lets a probe
+    // A/B hadoop/fs-level settings that must be present before getOrCreate
+    val spark = Harness.session("graft-scaleprobes", args.drop(2).filter(_.contains('=')).toSeq)
+    def timed(build: () => DataFrame): Seq[Double] = Harness.timedReps(spark, reps)(build)
 
     // frozen centroids pinned OUTSIDE the timer: production maintenance
     // reads them from the stored index artifact, never re-derives them
@@ -249,8 +228,7 @@ object ScaleProbes {
         // JSON per leg would fight the shared-persist design, so this probe
         // prints its own three-leg line and exits.
         val t = (1 to reps).map { _ =>
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
+          Harness.clearCaches(spark)
           val t0 = System.nanoTime()
           val docs = Queries.shingleSets(
             graft.operators.Tables.documents(spark, dir)).persist()
@@ -271,29 +249,6 @@ object ScaleProbes {
           ",\"pairs_s\":" + n4(m._4) + "}")
         spark.stop()
         return
-      case "qs_floor" =>
-        // r12 opt: where does a minimal 3-wave complete-mode streaming drain
-        // spend its time? Replicates the runToTable harness on the shared
-        // docs waves with a 1-key count agg and prints each batch's duration
-        // breakdown from StreamingQueryProgress.
-        require(Queries.all.nonEmpty) // registry clinit BEFORE StreamQueries
-        graft.streaming.StreamQueries.prewarmStreaming(spark, dir)
-        (1 to reps).foreach { r =>
-          val t0 = System.nanoTime()
-          val (tbl, prog) = graft.streaming.StreamQueries.probeMinimalDrain(spark, dir)
-          val total = (System.nanoTime() - t0) / 1e9
-          println(f"[qs_floor] rep $r total ${total}%.3f s, ${prog.size} batches")
-          prog.foreach(p => println(s"[qs_floor]   batch ${p.batchId}: " +
-            s"trigger=${p.durationMs.get("triggerExecution")}ms " +
-            s"addBatch=${p.durationMs.get("addBatch")}ms " +
-            s"getBatch=${p.durationMs.get("getBatch")}ms " +
-            s"latestOffset=${p.durationMs.get("latestOffset")}ms " +
-            s"queryPlanning=${p.durationMs.get("queryPlanning")}ms " +
-            s"walCommit=${p.durationMs.get("walCommit")}ms " +
-            s"commitOffsets=${p.durationMs.get("commitOffsets")}ms rows=${p.numInputRows}"))
-        }
-        spark.stop()
-        return
       case "x135_routed" =>
         spark.conf.set("spark.graft.splitleak.broadcastTestCap", "0")
         timed(() => Queries.byName("x135_semantic_split_leak").run(spark, dir))
@@ -304,19 +259,15 @@ object ScaleProbes {
         // width — hexChars=4 (65 536 buckets, the width a 1000-executor
         // cluster would run so bucket partitions stay narrow) vs the
         // default 2 (256), INTERLEAVED in one JVM with per-rep arm-order
-        // alternation (the eagerfinish_ab instrument: separate-JVM runs
-        // of this query measure JIT warmup, not the operator — observed
-        // 19→3 s decay across reps on the 100× corpus). The claim under
+        // alternation (separate-JVM runs of this query measure JIT
+        // warmup, not the operator — observed 19→3 s decay across reps
+        // on the 100× corpus). The claim under
         // test: the ≤2·buckets border stitch and the |sources|-row walk
         // stay flat as buckets scale ×256.
         val fn152 = Queries.byName("x152_shuffle_quality")
         def once152(hex: String): Double = {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
           spark.conf.set("spark.graft.shuffleaudit.hexChars", hex)
-          val t0 = System.nanoTime()
-          fn152.run(spark, dir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          Harness.timedReps(spark, 1)(() => fn152.run(spark, dir)).head
         }
         try once152("2") catch { case _: Throwable => () } // untimed warmup
         val arms152 = (1 to reps).flatMap { rep =>
@@ -328,46 +279,6 @@ object ScaleProbes {
         }
         spark.conf.unset("spark.graft.shuffleaudit.hexChars")
         println(f"""{"probe":"x152_width_ab","dir":"$dir","hex2_median_sec":${med152("2")}%.3f,"hex4_median_sec":${med152("4")}%.3f,"reps":$reps}""")
-        spark.stop()
-        return
-      case "eagerfinish_ab" =>
-        // r11 verdict item 2: price the eager-release recipe. For each
-        // converted query, reps are INTERLEAVED on/off in one JVM so both
-        // arms share the same host window (the r10 x148 "tripling" was
-        // co-tenancy, not the conversion — this probe is built to never
-        // repeat that misread). Off = r9 lifecycle: pins live until the
-        // per-rep cache clear, output keeps lineage; the timed action
-        // still pays full materialization either way.
-        val converted = Seq("x141_span_ladder", "x137_conformal_gate",
-          "x143_ivf_probe_ladder", "x148_conformal_proper",
-          "x149_ivf_delta_add", "x108_nb_quality_classifier",
-          "qs27_stream_conformal")
-        val fns = graft.SparkEntry.queries // qs27 lives in the stream registry
-        def onceTimed(build: () => DataFrame): Double = {
-          spark.catalog.clearCache()
-          spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))
-          val t0 = System.nanoTime()
-          build().write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        }
-        for (name <- converted) {
-          // untimed warmup so neither arm is charged first-run codegen,
-          // and per-rep arm-order alternation so residual drift within
-          // the window cancels instead of biasing whichever arm runs first
-          try onceTimed(() => fns(name)(spark, dir)) catch { case _: Throwable => () }
-          val arms = (1 to reps).flatMap { rep =>
-            (if (rep % 2 == 0) Seq(false, true) else Seq(true, false)).map { on =>
-              spark.conf.set("spark.graft.eagerFinish.enabled", on.toString)
-              on -> onceTimed(() => fns(name)(spark, dir))
-            }
-          }
-          spark.conf.set("spark.graft.eagerFinish.enabled", "true")
-          def med(on: Boolean) = {
-            val t = arms.filter(_._1 == on).map(_._2).sorted
-            t(t.size / 2)
-          }
-          println(f"""{"probe":"eagerfinish_ab","query":"$name","dir":"$dir","on_median_sec":${med(true)}%.3f,"off_median_sec":${med(false)}%.3f,"reps":$reps}""")
-        }
         spark.stop()
         return
       case "qs34_update" =>

@@ -11,7 +11,7 @@ import graft.exec.LocalExecutor
 import graft.fingerprints.Fingerprint
 import graft.graph.{Artifact, FileBackend, Graph, Producer}
 import graft.io.Format
-import graft.partitions.PartitionField.{DateField, IntField}
+import graft.partitions.PartitionField.{DateField, IntField, NullField}
 import graft.storage.{FileStorage, PathTemplate, StoragePartition}
 import graft.types.ArtiType._
 
@@ -202,5 +202,49 @@ class FileBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
     java.nio.file.Files.writeString(dir2.resolve("graphs.jsonl"),
       "garbage-not-json", java.nio.file.StandardOpenOption.APPEND)
     new FileBackend(dir2.toString) // must construct
+  }
+
+  test("replays golden log lines written in the original on-disk format") {
+    // byte-for-byte lines of the format every existing log holds: nested
+    // part/key/field objects, negative fingerprints, a null content_fp,
+    // date/int/null key fields, escapes (incl. a tab as a unicode escape) and
+    // the model carried as ONE escaped string value
+    val dir = Files.createTempDirectory("graft-fb9")
+    def log(file: String, lines: String*): Unit =
+      Files.writeString(dir.resolve(file), lines.mkString("", "\n", "\n"))
+    log("graphs.jsonl", """{"name":"fb7","fp":-8645007664857446809}""")
+    log("snapshots.jsonl", """{"graph":"fb7","id":-12}""")
+    log("tags.jsonl", """{"graph":"fb7","tag":"release","id":-12}""")
+    val partLine = """{"path":"/data/tx/we \"ird\"\nname\u0009x","key":{"d":{"kind":"date","iso":"2024-02-29"},"n":{"kind":"null"},"y":{"kind":"int","value":-7}},"input_fp":-987654321,"content_fp":null}"""
+    log("artifact_parts.jsonl", s"""{"artifact":"fb7/tx","part":$partLine}""")
+    log("snapshot_parts.jsonl",
+      """{"snapshot":-12,"artifact":"fb7/tx","part":{"path":"/data/tx/1970-01-01.json","key":{},"input_fp":0,"content_fp":-2988420762024659209}}""")
+    log("stats.jsonl",
+      """{"artifact":"fb7/tx","path":"/data/tx/we \"ird\"\nname\u0009x","stats":{"rows":"5","we\"ird\\key":"x\ny\u0009z"}}""")
+    log("models.jsonl",
+      """{"graph":"fb7","model":"{\"name\":\"fb7\",\"artifacts\":[{\"key\":\"total\",\"atype\":\"{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[{\\\"name\\\":\\\"t\\\",\\\"type\\\":\\\"double\\\",\\\"nullable\\\":false,\\\"metadata\\\":{\\\"kind\\\":\\\"scalar\\\"}}]}\",\"format\":\"json\",\"storage\":{\"kind\":\"file\",\"template\":\"/data/total/{input_fingerprint}\",\"field_kinds\":{}},\"annotations\":{}},{\"key\":\"tx\",\"atype\":\"{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[{\\\"name\\\":\\\"t\\\",\\\"type\\\":{\\\"type\\\":\\\"struct\\\",\\\"fields\\\":[{\\\"name\\\":\\\"id\\\",\\\"type\\\":\\\"long\\\",\\\"nullable\\\":false,\\\"metadata\\\":{}},{\\\"name\\\":\\\"date\\\",\\\"type\\\":\\\"date\\\",\\\"nullable\\\":false,\\\"metadata\\\":{}},{\\\"name\\\":\\\"amount\\\",\\\"type\\\":\\\"double\\\",\\\"nullable\\\":false,\\\"metadata\\\":{}}]},\\\"nullable\\\":false,\\\"metadata\\\":{\\\"kind\\\":\\\"collection\\\",\\\"name\\\":\\\"transactions\\\",\\\"struct_name\\\":\\\"tx\\\",\\\"partition_by\\\":[\\\"date\\\"]}}]}\",\"format\":\"json\",\"storage\":{\"kind\":\"file\",\"template\":\"/data/tx/{date.iso}.json\",\"field_kinds\":{\"date\":\"date\"}},\"annotations\":{\"owner\":\"spec\"}}],\"wiring\":[{\"producer\":\"t\",\"inputs\":[\"tx\"],\"outputs\":[\"total\"]}]}"}""")
+
+    val b = new FileBackend(dir.toString)
+    val path = "/data/tx/we \"ird\"\nname\tx"
+    val part = StoragePartition(path,
+      Map("d" -> DateField(java.time.LocalDate.of(2024, 2, 29)), "n" -> NullField, "y" -> IntField(-7)),
+      Fingerprint(-987654321L), None)
+    assert(b.readArtifactPartitions("fb7/tx") === Seq(part))
+    assert(b.readSnapshotPartitions(Fingerprint(-12L), "fb7/tx") === Seq(StoragePartition(
+      "/data/tx/1970-01-01.json", Map.empty, Fingerprint(0L), Some(Fingerprint(-2988420762024659209L)))))
+    assert(b.snapshotForTag("fb7", "release") === Some(Fingerprint(-12L)))
+    assert(b.readStatistics("fb7/tx")(path) === Map("rows" -> "5", "we\"ird\\key" -> "x\ny\tz"))
+    val model = b.readGraphModel("fb7").getOrElse(fail("golden model not replayed"))
+    assert(model.artifacts.map(_._1) === Seq("total", "tx"))
+    assert(model.artifact("tx").annotations === Map("owner" -> "spec"))
+    assert(model.wiring === Seq(graft.graph.ProducerWiring("t", Seq("tx"), Seq("total"))))
+
+    // today's encoder writes the same structure: the re-encoded part is
+    // JSON-equal to the golden one
+    val dir2 = Files.createTempDirectory("graft-fb10")
+    new FileBackend(dir2.toString).writeArtifactPartitions("fb7/tx", Seq(part))
+    val written = graft.util.MiniJson.parse(
+      Files.readAllLines(dir2.resolve("artifact_parts.jsonl")).get(0))
+    assert(written === graft.util.MiniJson.parse(s"""{"artifact":"fb7/tx","part":$partLine}"""))
   }
 }

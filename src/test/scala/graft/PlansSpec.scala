@@ -622,13 +622,30 @@ class PlansSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("x123: comparisons come from an ORDER-KEYED join; pair matrix and wins are cached across MM rounds") {
-    val df = Queries.byName("x123_bradley_terry").run(spark, sf)
-    df.collect()
-    val p = finalSection(df.queryExecution.executedPlan.toString)
-    assert(!p.contains("CartesianProduct"),
-      s"the lineitem self-join must stay keyed on l_orderkey:\n$p")
-    assert(p.contains("InMemoryTableScan"),
-      s"sym/base must be cached — each MM round re-reads them, not the corpus:\n$p")
+    // the returned frame reads only the last round's leaf, so the cache
+    // check runs on each MM round's localCheckpoint plan
+    val rounds = scala.collection.mutable.ArrayBuffer[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, durationNs: Long): Unit =
+        if (funcName == "localCheckpoint")
+          rounds.synchronized { rounds += finalSection(qe.executedPlan.toString) }
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      Queries.byName("x123_bradley_terry").run(spark, sf).collect()
+      org.apache.spark.GraftTestProbes.flushListenerBus(spark.sparkContext)
+      val all = rounds.synchronized(rounds.toList)
+      assert(all.size === 4, s"one localCheckpoint per MM round:\n${all.mkString("\n===\n")}")
+      all.foreach { p =>
+        assert(!p.contains("CartesianProduct"),
+          s"the lineitem self-join must stay keyed on l_orderkey:\n$p")
+        assert(p.contains("InMemoryTableScan"),
+          s"sym/base must be cached — each MM round re-reads them, not the corpus:\n$p")
+      }
+    } finally spark.listenerManager.unregister(listener)
     spark.catalog.clearCache()
     // the MM rounds' persisted-RDD leaves are NOT catalog-tracked
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = false))

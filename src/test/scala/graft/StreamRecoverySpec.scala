@@ -1388,4 +1388,15 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mass("nov_run2") > mass("nov_fresh"),
       "recovered incidence mass not above the fresh wave-2-only mass")
   }
+
+  test("runToTable drops its sink_ view; the returned frame still reads the sink's rows") {
+    def sinkViews = spark.catalog.listTables().collect()
+      .count(t => t.isTemporary && t.name.startsWith("sink_"))
+    // qs3 selects on top of the drained sink frame after the view is gone
+    val df = graft.operators.Queries.byName("qs3_stream_state").run(spark, sf)
+    assert(sinkViews === 0, "a memory-sink view outlived its qs run")
+    val rows = df.collect().map(_.toString).sorted.toSeq
+    assert(rows.nonEmpty)
+    assert(df.collect().map(_.toString).sorted.toSeq === rows, "second read diverged")
+  }
 }

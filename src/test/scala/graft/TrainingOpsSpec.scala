@@ -2094,13 +2094,27 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("x123: reliableLineageCut leaves (persist-based, recomputable) match the default checkpoint path") {
     // r13 verdict item 6: the conf swaps every MM round's localCheckpoint
     // leaf for a persist+lineage leaf (cluster fault-tolerance mode); the
-    // solve must be bit-identical either way.
+    // solve must be bit-identical either way. The same conf turns
+    // eagerFinish's localCheckpoint off (x137 returns its lineage frame):
+    // same rows, and only the default branch is checkpoint-backed.
+    def checkpointed(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.logical.exists(_.isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
     val fast = run("x123_bradley_terry").collect().toSeq
+    val gate = run("x137_conformal_gate")
+    val gateRows = gate.collect().map(_.toString).sorted.toSeq
+    assert(checkpointed(gate))
     spark.conf.set("spark.graft.reliableLineageCut", "true")
     try {
       val reliable = run("x123_bradley_terry").collect().toSeq
       assert(reliable === fast, "reliable-cut path diverged from checkpoint path")
-    } finally spark.conf.unset("spark.graft.reliableLineageCut")
+      val reliableGate = run("x137_conformal_gate")
+      assert(!checkpointed(reliableGate), "eagerFinish still cut lineage under reliableLineageCut")
+      assert(reliableGate.collect().map(_.toString).sorted.toSeq === gateRows,
+        "eagerFinish's lineage branch diverged from its checkpoint branch")
+    } finally {
+      spark.conf.unset("spark.graft.reliableLineageCut")
+      spark.catalog.clearCache()
+    }
   }
 
   test("x124: holdout accuracy is the exact ppm of argmax-correct test transitions") {
