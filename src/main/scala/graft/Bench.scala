@@ -31,6 +31,29 @@ object Bench {
     }
   }
 
+  private def jnum(d: Double): String = f"$d%.4f"
+
+  private def jmap(kvs: Seq[(String, Double)]): String =
+    kvs.map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
+
+  /** Bench consumers keep only a 2000-char stdout tail. */
+  private[graft] val ShortLineMax = 2000
+
+  /** The bench's final stdout line: the total, the pair ratio when
+    * measured, the artifact path (which holds every per-query median and
+    * spread) and a `"queries"` map of the 40 largest per-query medians,
+    * cut shorter when a long path or long names would push the line past
+    * [[ShortLineMax]]. */
+  private[graft] def shortLine(total: Double, protocol: String, medians: Seq[(String, Double)],
+      pairRatio: Option[Double], out: String, sfDir: String): String = {
+    val top = medians.sortBy(-_._2).take(40)
+    def render(n: Int) =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$protocol","n_queries":${medians.size}""" +
+        pairRatio.map(r => s""","pair_ratio":${jnum(r)}""").getOrElse("") +
+        s""","queries":${jmap(top.take(n))},"queries_file":"$out","sf":"$sfDir"}"""
+    (top.size to 0 by -1).iterator.map(render).find(_.length <= ShortLineMax).getOrElse(render(0))
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // MEDIAN-OF-N protocol (default 3): each query runs N times
@@ -86,10 +109,10 @@ object Bench {
       val (median, spread) = measure(spark, name, warm, qReps)(() => fn(spark, sfDir))
       (name, median, spread)
     }
-    def jnum(d: Double): String = f"$d%.4f"
-    val qs = results.map { case (k, m, _) => "\"" + k + "\":" + jnum(m) }.mkString("{", ",", "}")
-    val spread = results.map { case (k, _, s) => "\"" + k + "\":" + jnum(s) }.mkString("{", ",", "}")
+    val qs = jmap(results.map { case (k, m, _) => k -> m })
+    val spread = jmap(results.map { case (k, _, s) => k -> s })
     val total = results.map(_._2).sum
+    val protocol = s"median_of_${reps}_qs_${math.max(reps, 5)}"
     spark.stop() // engine loop done; the oracle pair (below) must not share the window with a live JVM doing work
     // SELF-PAIRING (r11): raw totals drift 1.4-2x between host windows
     // (r10's unpaired driver artifact read x123 at 77 s where the
@@ -123,38 +146,29 @@ object Bench {
         val eng = common.map(_._2).sum
         val ora = common.map { case (n, _, _) => oracleT(n) }.sum
         val wins = common.count { case (n, m, _) => m < oracleT(n) }
-        val oq = oracleT.toSeq.sortBy(_._1)
-          .map { case (k, v) => "\"" + k + "\":" + jnum(v) }.mkString("{", ",", "}")
+        val oq = jmap(oracleT.toSeq.sortBy(_._1))
         pairRatio = Some(eng / ora)
         s""","pair":{"oracle_total_s":${jnum(oracleT.values.sum)},"batch_common":${common.size},"engine_common_s":${jnum(eng)},"oracle_common_s":${jnum(ora)},"pair_ratio":${jnum(eng / ora)},"engine_wins":$wins,"oracle_queries":$oq}"""
       } catch { case e: Throwable =>
         s""","pair_error":${"\"" + e.toString.take(200).replaceAll("[\"\\\\\\n\\r\\t]", " ") + "\""}"""
       }
-    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"median_of_${reps}_qs_${math.max(reps, 5)}","queries":$qs,"spread":$spread$pairBlock,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"$protocol","queries":$qs,"spread":$spread$pairBlock,"sf":"$sfDir"}"""
     println(line)
     // the full per-query map also lands in a FILE: stdout capture truncated
     // the round-4 artifact to 69/104 queries, and the file is what keeps
     // BASELINE.md prose honest (quote the artifact, never a side run).
     // Default path is anchored to the repo root (where build.sbt lives) so
     // a JVM launched from elsewhere doesn't scatter artifacts; the file is
-    // gitignored — round closes copy it to BENCH_LOCAL_r{N}.json.
-    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", repoRoot.resolve("BENCH_LOCAL.json").toString)
+    // gitignored — round closes copy it to BENCH_LOCAL_r{N}.json. It is
+    // named per core count so an 8-core run keeps the 32-core medians.
+    val out = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
+      repoRoot.resolve(s"BENCH_LOCAL_c${Harness.cpus}.json").toString)
     java.nio.file.Files.write(java.nio.file.Paths.get(out),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    // MEASUREMENT-REPORTING FIX (r13, verdict item 1): the full line above
-    // is ~15 KB for 269 queries, and the driver's artifact keeps only a
-    // 2000-char stdout TAIL — so its JSON parse has failed (parsed:null)
-    // every round since r08, leaving PERF blind. The FINAL stdout line is
-    // therefore a SHORT summary that always fits the tail whole: same
-    // metric/value/unit contract, counts, the pair ratio when measured,
-    // and a pointer to the artifact file that carries the per-query maps
-    // (which this main has always written). The full line still prints
-    // first and still lands in the file — no number is dropped or changed;
-    // only the FINAL line's payload moved from per-query maps to a pointer.
-    val shortLine =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","protocol":"median_of_${reps}_qs_${math.max(reps, 5)}","n_queries":${results.size}""" +
-      pairRatio.map(r => s""","pair_ratio":${jnum(r)}""").getOrElse("") +
-      s""","queries_file":"$out","sf":"$sfDir"}"""
-    println(shortLine)
+    // the full line above is ~15 KB for 269 queries and consumers keep
+    // only a 2000-char stdout tail, so the FINAL line is a short summary
+    // that always fits it whole
+    println(shortLine(total, protocol, results.map { case (k, m, _) => k -> m },
+      pairRatio, out, sfDir))
   }
 }

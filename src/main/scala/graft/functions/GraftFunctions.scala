@@ -920,7 +920,8 @@ case class CdcChunks(child: Expression, divisor: Int) extends UnaryExpression {
 /** Order-independent fingerprint combination as a typed Aggregator
   * (SURVEY §4(b)): XOR over int64 fingerprints, the distributed analog of
   * `Fingerprint.combine` — commutative/associative, so partial aggregation
-  * and any merge order give the same result. Registered as `graft_xor`. */
+  * and any merge order give the same result. Use it through
+  * `functions.udaf(XorAgg)`. */
 object XorAgg extends org.apache.spark.sql.expressions.Aggregator[Long, Long, Long] {
   override def zero: Long = 0L
   override def reduce(b: Long, a: Long): Long = b ^ a
@@ -930,8 +931,8 @@ object XorAgg extends org.apache.spark.sql.expressions.Aggregator[Long, Long, Lo
   override def outputEncoder: org.apache.spark.sql.Encoder[Long] = org.apache.spark.sql.Encoders.scalaLong
 }
 
-/** SQL registration so queries can use the expressions as `graft_dot(...)`
-  * etc. Idempotent per session. */
+/** The SQL names of the expressions (`graft_dot(...)` etc.), which
+  * [[GraftExtensions]] puts into a session. */
 object GraftFunctions {
   private def intArg(e: Expression): Int =
     if (e.foldable && e.dataType == IntegerType) e.eval() match {
@@ -982,30 +983,43 @@ object GraftFunctions {
     "graft_cdc_chunks" -> (es => CdcChunks(es.head, if (es.size > 1) intArg(es(1)) else 32)),
     "graft_rolling_fp" -> (es => RollingFp(es.head)),
     "graft_span_ladder" -> (es => SpanLadder(es.head)))
+}
 
-  def register(spark: SparkSession): Unit = {
-    all.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry.createOrReplaceTempFunction(name, builder, "built-in")
-    }
-    spark.udf.register("graft_xor", org.apache.spark.sql.functions.udaf(XorAgg))
+/** What the engine adds to a session: the graft functions, the
+  * [[graft.plans.CartesianGuard]] optimizer rule and the
+  * [[graft.plans.AsofJoinStrategy]] planner strategy. A session built with
+  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")`
+  * (every `graft.tools.Harness` session) gets them at construction; one
+  * built without it gets them from [[GraftExtensions.install]]. */
+class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    ext.injectOptimizerRule(graft.plans.CartesianGuard.apply)
+    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }
 
-/** `SparkSessionExtensions` hook: add
-  * `.config("spark.sql.extensions", "graft.functions.GraftExtensions")` and
-  * every session gets the functions without explicit registration. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach { case (name, builder) =>
-      ext.injectFunction((
-        FunctionIdentifier(name),
-        new ExpressionInfo("graft.functions.GraftFunctions", name),
-        builder))
+object GraftExtensions {
+  private def functions = GraftFunctions.all.map { case (name, builder) =>
+    (FunctionIdentifier(name), new ExpressionInfo("graft.functions.GraftFunctions", name), builder)
+  }
+
+  /** Gives a session built without the extension the same three additions,
+    * once: when the graft functions are present (the extension's sessions,
+    * or an earlier install) it returns after one registry lookup and
+    * writes nothing. The functions go in last, so a concurrent caller that
+    * sees them also sees the rule and the strategy. Every registry query
+    * calls this (`Queries.all`), so callers that bring their own session
+    * need no setup. */
+  def install(spark: SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
+    val last = FunctionIdentifier(GraftFunctions.all.last._1)
+    if (!registry.functionExists(last)) synchronized {
+      if (!registry.functionExists(last)) {
+        spark.experimental.extraOptimizations :+= graft.plans.CartesianGuard(spark)
+        spark.experimental.extraStrategies :+= graft.plans.AsofJoinStrategy
+        functions.foreach { case (id, info, builder) => registry.registerFunction(id, info, builder) }
+      }
     }
-    // plan-time guard against accidental cartesian products (opt-in via
-    // graft.guard.noCartesian — see CartesianGuard's scaladoc)
-    ext.injectOptimizerRule(graft.plans.CartesianGuard.apply)
-    // the whole-operator seam: AsofJoinPlan → AsofJoinExec (q6b)
-    ext.injectPlannerStrategy(_ => graft.plans.AsofJoinStrategy)
   }
 }

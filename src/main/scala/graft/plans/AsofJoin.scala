@@ -138,17 +138,13 @@ object AsofJoin {
     * nullable types would ban every nullable-typed column outright).
     * Note this drops null-key LEFT rows too — a null as-of key has no
     * meaningful match, and silently null-extending it would hide data
-    * quality problems the caller should see. */
+    * quality problems the caller should see.
+    *
+    * The node plans only on a session carrying
+    * [[graft.functions.GraftExtensions]] (its [[AsofJoinStrategy]]). */
   def asof(left: DataFrame, right: DataFrame,
       leftKey: String, rightKey: String,
       leftTime: String, rightTime: String): DataFrame = {
-    // self-register on sessions built without the GraftExtensions conf
-    // (the GraftFunctions.register(s) discipline, via the PUBLIC
-    // experimental.extraStrategies seam)
-    val spark = left.sparkSession
-    if (!spark.experimental.extraStrategies.contains(AsofJoinStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ AsofJoinStrategy
     val lp = left.queryExecution.analyzed
     val rp = right.queryExecution.analyzed
     def attr(p: LogicalPlan, name: String): Attribute =

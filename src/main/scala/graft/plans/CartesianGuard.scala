@@ -50,15 +50,3 @@ case class CartesianGuard(spark: SparkSession) extends Rule[LogicalPlan] {
     plan
   }
 }
-
-object CartesianGuard {
-  /** Session-level install for sessions built WITHOUT
-    * `spark.sql.extensions` (tests, notebooks): the same rule through
-    * `experimental.extraOptimizations`. Idempotent; double-install (config
-    * + extension) is harmless — the rule only ever throws or no-ops. */
-  def install(spark: SparkSession): Unit = {
-    val existing = spark.experimental.extraOptimizations
-    if (!existing.exists(_.isInstanceOf[CartesianGuard]))
-      spark.experimental.extraOptimizations = existing :+ CartesianGuard(spark)
-  }
-}

@@ -7,6 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** Counts forced broadcast hints in EVERY plan the session optimizes,
   * attributed to whichever query the sweep is currently driving. Hooked in
@@ -78,17 +79,8 @@ class BroadcastInventorySpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("broadcast-inventory-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("broadcast-inventory-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

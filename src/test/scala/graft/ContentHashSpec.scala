@@ -8,6 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fingerprints.Fingerprint
 import graft.storage.{ContentHash, FileStorage, PathTemplate, StoragePartition}
+import graft.tools.Harness
 
 /** F22 distributed content fingerprinting: the driver path and the
   * cluster path must produce the SAME fingerprint for the same bytes, and
@@ -20,13 +21,8 @@ class ContentHashSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: Path = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .appName("content-hash-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("content-hash-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
     dir = Files.createTempDirectory("graft-hash")
   }
 

@@ -11,6 +11,7 @@ import graft.exec.LocalExecutor
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer}
 import graft.io.{Format, IO}
 import graft.storage.{FileStorage, LiteralStorage, PathTemplate}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** Error paths, in the spirit of the reference's error-heavy test suite
@@ -19,17 +20,8 @@ import graft.types.ArtiType._
   * stage, not at runtime in a cluster. */
 class ErrorsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("errors-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("errors-spec",
+    Seq("spark.master=local[2]", "spark.sql.shuffle.partitions=2", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 
@@ -109,7 +101,6 @@ class ErrorsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("graft function int parameters reject non-literals at plan time") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq((Seq(1L, 2L), 4)).toDF("h", "k")
     val ex = intercept[Exception] {

@@ -13,6 +13,7 @@ import graft.graph.{Artifact, FileBackend, Graph, Producer}
 import graft.io.Format
 import graft.partitions.PartitionField.{DateField, IntField, NullField}
 import graft.storage.{FileStorage, PathTemplate, StoragePartition}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** Durable backend: the metadata contract round-trips through the JSONL
@@ -21,17 +22,8 @@ import graft.types.ArtiType._
   * skips everything a previous "process" built). */
 class FileBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("filebackend-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("filebackend-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -12,25 +12,17 @@ import graft.fingerprints.Version
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer}
 import graft.io.Format
 import graft.storage.{FileStorage, LiteralStorage, PathTemplate}
-import graft.types.{TypeAdapter, TypeSystemRegistry}
+import graft.tools.Harness
 import graft.types.ArtiType._
+import graft.types.{TypeAdapter, TypeSystemRegistry}
 
 /** Round-2 framework completions: multi-IO typed producers + wiring-time
   * checks (F6), scalar views (F33), Timestamp/Source versions (F36), the
   * TypeAdapter registry (F28), and enum construction validation (F2). */
 class FrameworkPartialsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("framework-partials-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("framework-partials-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

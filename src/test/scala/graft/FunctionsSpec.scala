@@ -1,32 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.fingerprints.Fingerprint
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, XorAgg}
 import graft.operators.Queries
+import graft.plans.{AsofJoinStrategy, CartesianGuard}
+import graft.tools.Harness
 
 /** Custom-expression kernels: correctness against independent computations,
-  * and the LSH paths' recall against their exact baselines. */
+  * and the LSH paths' recall against their exact baselines; and how the
+  * kernels reach a session: registry runs change nothing on a session
+  * carrying GraftExtensions, and install it once on one without. */
 class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("functions-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    GraftFunctions.register(s)
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("functions-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 
@@ -109,26 +105,20 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(bf.nonEmpty)
   }
 
-  test("graft_xor aggregator: order-independent, parity with driver combineAll") {
+  test("XorAgg aggregator: order-independent, parity with driver combineAll") {
     import spark.implicits._
     val vals = Seq(3L, 9L, 123456789L, -42L, Long.MinValue)
     val expected = graft.fingerprints.Fingerprint.combineAll(
       vals.map(graft.fingerprints.Fingerprint(_))).key
-    val a = vals.toDF("v").repartition(4).selectExpr("graft_xor(v)").as[Long].head()
-    val b = vals.reverse.toDF("v").repartition(2).selectExpr("graft_xor(v)").as[Long].head()
+    val xor = udaf(XorAgg)
+    val a = vals.toDF("v").repartition(4).select(xor(col("v"))).as[Long].head()
+    val b = vals.reverse.toDF("v").repartition(2).select(xor(col("v"))).as[Long].head()
     assert(a === expected && b === expected)
   }
 
   test("GraftExtensions injects functions without explicit registration") {
-    val s2 = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.ui.enabled", "false")
-      .withExtensions(new graft.functions.GraftExtensions)
-      .appName("ext-spec").getOrCreate()
-    try {
-      val v = s2.sql("SELECT farmhash64('graft') AS h").collect()(0).getLong(0)
-      assert(v === Fingerprint.fromString("graft").key)
-    } finally () // shared JVM session: don't stop, other suites may hold it
+    val v = spark.sql("SELECT farmhash64('graft') AS h").collect()(0).getLong(0)
+    assert(v === Fingerprint.fromString("graft").key)
   }
 
   test("IVF ANN (x14) recall against brute force (x6) is reasonable and exactly scored") {
@@ -315,5 +305,48 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the planted repeat really collides: fewer keys than positions at 8/16
     assert(byLvl(8).size < 41 && byLvl(16).size < 33)
     assert(!byLvl.contains(64), "levels above the doc length must not emit")
+  }
+
+  // x17 calls graft_* kernels through a multi-round lineage-cut loop; q6b
+  // is the one query that plans an AsofJoinPlan
+  private val engineQueries = Seq("x17_dedup_clusters", "q6b_asof_custom")
+
+  private def registryInfos(s: SparkSession): Seq[ExpressionInfo] =
+    GraftFunctions.all.map { case (name, _) =>
+      s.sessionState.functionRegistry.lookupFunction(FunctionIdentifier(name)).get
+    }
+
+  private def assertSameInfos(after: Seq[ExpressionInfo], before: Seq[ExpressionInfo]): Unit =
+    after.zip(before).foreach { case (a, b) => assert(a eq b, s"${a.getName} re-registered") }
+
+  private def canon(df: DataFrame): Seq[String] =
+    df.select(df.columns.sorted.map(col): _*).collect().map(_.toString).sorted.toSeq
+
+  test("registry runs on a Harness session write no function, rule or strategy") {
+    val infos = registryInfos(spark)
+    val (rules, strategies) = (spark.experimental.extraOptimizations, spark.experimental.extraStrategies)
+    engineQueries.foreach(n => Queries.byName(n).run(spark, sf).collect())
+    assertSameInfos(registryInfos(spark), infos)
+    assert(spark.experimental.extraOptimizations === rules)
+    assert(spark.experimental.extraStrategies === strategies)
+  }
+
+  // keep this test last: it stops the spec's session, since a session
+  // without the extension needs a SparkContext started without it
+  test("a session built without GraftExtensions gets it once, on its first registry run") {
+    val expected = engineQueries.map(n => canon(SparkEntry.queries(n)(spark, sf)))
+    spark.stop()
+    val bare = Harness.session("functions-spec-bare", Seq("spark.master=local[4]",
+      "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR", "spark.sql.extensions="))
+    try {
+      assert(!bare.sessionState.functionRegistry.functionExists(FunctionIdentifier("graft_dot")))
+      def run() = engineQueries.map(n => canon(SparkEntry.queries(n)(bare, sf)))
+      assert(run() === expected)
+      val infos = registryInfos(bare)
+      assert(run() === expected)
+      assertSameInfos(registryInfos(bare), infos)
+      assert(bare.experimental.extraOptimizations.count(_.isInstanceOf[CartesianGuard]) === 1)
+      assert(bare.experimental.extraStrategies.count(_ == AsofJoinStrategy) === 1)
+    } finally bare.stop()
   }
 }

@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** Semantic invariants of the r7 governance/experimentation family
   * (x116 k-anonymity, x117 A/B Welch, x118 DP release, qs23 streaming
@@ -18,15 +19,8 @@ class GovernanceSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("governance-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("governance-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -12,6 +12,7 @@ import graft.fingerprints.Version
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer}
 import graft.io.Format
 import graft.storage.{FileStorage, PathTemplate}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** End-to-end graph builds with incremental assertions — the engine-side
@@ -24,14 +25,8 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: Path = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("graph-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("graph-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
     dir = Files.createTempDirectory("graft-spec")
   }
 

@@ -11,6 +11,7 @@ import graft.exec.LocalExecutor
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer, RehydratedSnapshot}
 import graft.io.{Format, IO, JavaSerFormat}
 import graft.storage.{FileStorage, PathTemplate, StoragePartition}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** The pickle-analog opaque-object format (reference formats/pickle.py)
@@ -24,14 +25,8 @@ class JavaSerSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     JavaSerFormat.register()
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("javaser-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("javaser-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
     dir = Files.createTempDirectory("graft-javaser")
   }
 

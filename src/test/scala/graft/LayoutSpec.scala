@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.io.{Format, IO}
 import graft.partitions.PartitionField.IntField
 import graft.storage.{FileStorage, PathTemplate}
+import graft.tools.Harness
 
 /** Storage-layout interop and co-location: the native Hive `k=v` fast path
   * round-trips through the engine's template parser with partition pruning,
@@ -19,18 +20,11 @@ class LayoutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private lazy val wh = Files.createTempDirectory("graft-wh").toString
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir", wh)
-      .appName("layout-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("layout-spec", Seq(
+    "spark.master=local[4]",
+    "spark.sql.shuffle.partitions=4",
+    s"spark.sql.warehouse.dir=$wh",
+    "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -9,6 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** Latches a task of the cut's materializing job shares with a driver
   * thread (local mode: executors are threads of this JVM). */
@@ -24,16 +25,8 @@ object LineageCutLatch {
   * and localCheckpoint blocks cannot be recomputed). */
 class LineageCutSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("lineage-cut-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("lineage-cut-spec",
+    Seq("spark.master=local[2]", "spark.sql.shuffle.partitions=2", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

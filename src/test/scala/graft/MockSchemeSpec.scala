@@ -13,6 +13,7 @@ import graft.exec.LocalExecutor
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer, RehydratedSnapshot}
 import graft.io.Format
 import graft.storage.{FileStorage, MockFileSystem, PathTemplate}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** F21 — the storage seam proven on a non-file scheme: q13's spend graph
@@ -26,17 +27,13 @@ class MockSchemeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: JPath = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // the scheme registration — exactly how a real deployment mounts
-      // s3a/gs: a hadoop conf key naming the FileSystem impl
-      .config("spark.hadoop.fs.mock.impl", classOf[MockFileSystem].getName)
-      .appName("mock-scheme-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    // the scheme registration — exactly how a real deployment mounts
+    // s3a/gs: a hadoop conf key naming the FileSystem impl
+    spark = Harness.session("mock-scheme-spec", Seq(
+      "spark.master=local[4]",
+      "spark.sql.shuffle.partitions=4",
+      s"spark.hadoop.fs.mock.impl=${classOf[MockFileSystem].getName}",
+      "spark.log.level=ERROR"))
     dir = Files.createTempDirectory("graft-mock")
   }
 

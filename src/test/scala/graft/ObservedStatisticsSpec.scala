@@ -12,6 +12,7 @@ import graft.exec.LocalExecutor
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer, Statistics}
 import graft.io.{Format, IO, JavaSerFormat}
 import graft.storage.{FileStorage, PathTemplate, StoragePartition}
+import graft.tools.Harness
 import graft.types.ArtiType._
 
 /** The executor records a built partition's statistics from the staging
@@ -21,17 +22,8 @@ import graft.types.ArtiType._
   * tasks. */
 class ObservedStatisticsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("observed-statistics-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("observed-statistics-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -7,6 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** Physical-plan quality gates: the properties that keep these operators
   * viable at 100 TB — filters/columns reaching the parquet scan, dims
@@ -16,17 +17,8 @@ class PlansSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private val sf = "/root/testdata/sf0.001"
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("plans-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("plans-spec",
+    Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 
@@ -192,7 +184,6 @@ class PlansSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cartesian guard: unconditioned cross joins fail at PLAN time when enabled") {
     val a = spark.range(10).toDF("x")
     val b = spark.range(10).toDF("y")
-    graft.plans.CartesianGuard.install(spark) // session built without extensions
     spark.conf.set("graft.guard.noCartesian", "true")
     try {
       // the nastiest accident: a join condition that folds to TRUE — the

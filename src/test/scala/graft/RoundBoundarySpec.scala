@@ -7,6 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** ROUND-BOUNDARY AUDIT — the cross-engine fragility gate for every
   * query whose oracle contract still quantizes a DOUBLE with `round(...)`
@@ -40,17 +41,8 @@ class RoundBoundarySpec extends AnyFunSuite with BeforeAndAfterAll {
   // run at another scale: sbt -Dgraft.rbs.sf=/root/testdata/sf0.1 ...
   private val sf = sys.props.getOrElse("graft.rbs.sf", "/root/testdata/sf0.01")
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("round-boundary-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("round-boundary-spec",
+    Seq("spark.master=local[8]", "spark.sql.shuffle.partitions=8", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

@@ -9,6 +9,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamQueries
+import graft.tools.Harness
 
 /** F19's streaming durability story, proven across a PROCESS-death
   * boundary: the qs12 SCD2 state machine (flatMapGroupsWithState) writes
@@ -28,15 +29,8 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("stream-recovery-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("stream-recovery-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -1244,7 +1238,6 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val srcDir = Files.createDirectories(root.resolve("waves"))
     val ckpt = root.resolve("ckpt").toString
 
-    graft.functions.GraftFunctions.register(spark)
     val (prior, keys, vals) = graft.operators.Queries.nbModelFrozen(spark, sf)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def writeWave(i: Int): Unit = {
@@ -1293,7 +1286,6 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val srcDir = Files.createDirectories(root.resolve("waves"))
     val ckpt = root.resolve("ckpt").toString
 
-    graft.functions.GraftFunctions.register(spark)
     val bench = graft.operators.Queries.excisionBench(spark, sf)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def writeWave(i: Int): Unit = {
@@ -1342,7 +1334,6 @@ class StreamRecoverySpec extends AnyFunSuite with BeforeAndAfterAll {
     val srcDir = Files.createDirectories(root.resolve("waves"))
     val ckpt = root.resolve("ckpt").toString
 
-    graft.functions.GraftFunctions.register(spark)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     def writeWave(i: Int): Unit = {
       docs.filter(pmod(xxhash64(col("doc_id")), lit(3)) === i)

@@ -6,11 +6,15 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source-scan gates (the CollectInventorySpec style) for two structural
+/** Source-scan gates (the CollectInventorySpec style) for structural
   * invariants:
-  *   - every main builds its session through `graft.tools.Harness`, so
-  *     cores, split sizing, time zone and scratch cannot drift between
-  *     entry points: exactly one `SparkSession.builder()` in src/main;
+  *   - every main and every test spec builds its session through
+  *     `graft.tools.Harness`, so cores, split sizing, time zone, scratch
+  *     and the engine's extension cannot drift between them: exactly one
+  *     `SparkSession.builder()` in src/main and none in src/test;
+  *   - only `GraftExtensions.install` writes a session's function registry
+  *     or its experimental rules and strategies: a query that did so would
+  *     change state every other query on the session shares;
   *   - no operator or streaming query releases blocks by a
   *     `getPersistentRDDs` scan: under LocalExecutor's concurrent
   *     producers such a scan also sees (and can free) another query's
@@ -37,5 +41,16 @@ class StructureGateSpec extends AnyFunSuite {
   test("no getPersistentRDDs under operators/ or streaming/") {
     assert(sites(Seq("src/main/scala/graft/operators", "src/main/scala/graft/streaming"),
       "getPersistentRDDs").isEmpty)
+  }
+
+  test("no SparkSession.builder() under src/test/scala: specs use Harness.session") {
+    assert(sites(Seq("src/test/scala"), "SparkSession.builder()")
+      .filterNot(_ == "StructureGateSpec.scala").isEmpty)
+  }
+
+  test("session registry and experimental hooks are written only by GraftExtensions.install") {
+    for (call <- Seq("createOrReplaceTempFunction", "registerFunction", "udf.register",
+        "experimental.extraStrategies", "experimental.extraOptimizations"))
+      assert(sites(Seq("src/main/scala"), call).forall(_ == "GraftFunctions.scala"), call)
   }
 }

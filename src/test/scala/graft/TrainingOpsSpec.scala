@@ -7,6 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Queries
+import graft.tools.Harness
 
 /** Semantic invariants of the round-3 training-data operators — the laws
   * that must hold at ANY scale factor, checked over real testdata (the
@@ -18,15 +19,8 @@ class TrainingOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private val sf = "/root/testdata/sf0.001"
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.functions.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .appName("training-ops-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("training-ops-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()

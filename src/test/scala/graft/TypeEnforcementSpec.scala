@@ -4,6 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.tools.Harness
 import graft.types.ArtiType._
 import graft.types.TypeEnforcement
 
@@ -11,16 +12,8 @@ import graft.types.TypeEnforcement
   * plus the ready-made validateOutputs gate built from them. */
 class TypeEnforcementSpec extends AnyFunSuite with BeforeAndAfterAll {
 
-  private lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.ui.enabled", "false")
-      .appName("type-enforcement-spec")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  private lazy val spark: SparkSession = Harness.session("type-enforcement-spec",
+    Seq("spark.master=local[2]", "spark.sql.shuffle.partitions=2", "spark.log.level=ERROR"))
 
   override def afterAll(): Unit = spark.stop()
 

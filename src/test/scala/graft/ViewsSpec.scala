@@ -11,6 +11,7 @@ import graft.exec.LocalExecutor
 import graft.graph.{Artifact, ArtiView, Graph, MemoryBackend, Producer, ViewRegistry}
 import graft.io.Format
 import graft.storage.{FileStorage, PathTemplate}
+import graft.tools.Harness
 import graft.types.ArtiType
 import graft.types.ArtiType._
 
@@ -24,14 +25,8 @@ class ViewsSpec extends AnyFunSuite with BeforeAndAfterAll {
   private var dir: Path = _
 
   override def beforeAll(): Unit = {
-    spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .appName("views-spec")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = Harness.session("views-spec",
+      Seq("spark.master=local[4]", "spark.sql.shuffle.partitions=4", "spark.log.level=ERROR"))
     dir = Files.createTempDirectory("graft-views")
   }
 
