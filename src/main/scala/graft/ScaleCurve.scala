@@ -1,9 +1,13 @@
 package graft
+
+import org.apache.spark.metrics.source.CodegenMetrics
+
 import graft.tools.Harness
 
 /** Scale-curve probe (r7 evidence run): times a named subset of the
   * registry at several data directories and prints one JSON line per
-  * (dir, query) with each rep's time and the median — used to measure the
+  * (dir, query) with each rep's time, each rep's count of compiled
+  * generated classes, and the median — used to measure the
   * sf0.1 → 10× wall-clock ratios for the dedup/ANN flagships recorded in
   * BASELINE.md. The 10× corpus is built by `tools/make_scale10.py`: ten
   * vocabulary-disjoint shards, each a token-bijection image of sf0.1, so
@@ -32,11 +36,18 @@ object ScaleCurve {
     catch { case _: Throwable => () }
     for (dir <- dirs; name <- names) {
       val fn = SparkEntry.queries(name)
-      val times = Harness.timedReps(spark, reps)(() => fn(spark, dir))
+      // per rep: seconds, and the generated classes it compiled (each
+      // compile records one compilation time), so a compile-bound query shows
+      val (times, compiles) = (1 to reps).map { _ =>
+        val c0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+        val t = Harness.timedReps(spark, 1)(() => fn(spark, dir)).head
+        (t, CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0)
+      }.unzip
       val med = times.sorted.apply(times.size / 2)
       val rows = fn(spark, dir).count() // untimed; count may legally prune
       println(f"""SCALECURVE {"dir":"$dir","query":"$name","sec":$med%.3f,""" +
-        s""""times":${times.map(t => f"$t%.3f").mkString("[", ",", "]")},"rows":$rows}""")
+        s""""times":${times.map(t => f"$t%.3f").mkString("[", ",", "]")},""" +
+        s""""compiles":${compiles.mkString("[", ",", "]")},"rows":$rows}""")
     }
     spark.stop()
   }

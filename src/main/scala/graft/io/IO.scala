@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, SaveMode, SparkSession}
 import org.apache.spark.sql.types.StructType
 
 import graft.storage.{LiteralStorage, StoragePartition, Storage, FileStorage}
@@ -123,6 +123,15 @@ object IO {
   def readParquet(spark: SparkSession, paths: String*): DataFrame =
     ParquetFooterSchema.infer(spark, paths).fold(spark.read)(spark.read.schema).parquet(paths: _*)
 
+  /** `w` writing `file:` paths through [[NioLocalFileSystem]], which sets
+    * modes without forking `chmod`. Spark copies writer options into this
+    * write job's Hadoop conf only, so no session or global conf changes.
+    * The FileSystem cache is keyed by scheme, not class, so it is bypassed
+    * for the job. */
+  private def withNioLocalFs[T](w: DataFrameWriter[T]): DataFrameWriter[T] =
+    w.option("fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .option("fs.file.impl.disable.cache", "true")
+
   /** Bulk write of a whole partitioned Collection in the engine-native Hive
     * layout (`k=v` directories): one distributed write for every partition
     * at once — the fast path when a producer emits all partitions together.
@@ -139,7 +148,7 @@ object IO {
       clusterBy: Seq[String] = Nil,
       overwrite: Boolean = false): Unit = {
     val sorted = if (clusterBy.nonEmpty) df.sortWithinPartitions(clusterBy.map(df.col): _*) else df
-    val w = sorted.write
+    val w = withNioLocalFs(sorted.write)
       .mode(if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists)
       .partitionBy(partitionBy: _*)
     format match {
@@ -214,7 +223,7 @@ object IO {
       case None => (format, storage) match {
         case (f, _: FileStorage) if builtinFileFormat(f) =>
           val mode = if (overwrite) SaveMode.Overwrite else SaveMode.ErrorIfExists
-          val w = df.write.mode(mode)
+          val w = withNioLocalFs(df.write).mode(mode)
           f match {
             case Format.Json    => w.json(partition.path)
             case Format.Parquet => w.parquet(partition.path)

@@ -20,10 +20,10 @@ import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileMana
   * listings around them). Spark's default managers route each through the
   * Hadoop FileSystem/FileContext stack, which the qs_floor probe measured
   * at ~25-40 ms PER OPERATION on this host even with the checkpoint on
-  * tmpfs — walCommit + commitOffsets + latestOffset alone ≈ 120 ms/batch,
-  * pure Hadoop bookkeeping (FS resolution, checksum wrapping, shell-less
-  * RawLocalFileSystem still ~24 ms/op). java.nio does the same rename/
-  * write/list in microseconds. Across the 46-query qs family at ~2-4
+  * tmpfs — walCommit + commitOffsets + latestOffset alone ≈ 120 ms/batch.
+  * The measured cause: without libhadoop, `RawLocalFileSystem` sets the
+  * mode of every file or directory it creates by forking a `chmod`
+  * process. java.nio does the same rename/write/list in microseconds. Across the 46-query qs family at ~2-4
   * micro-batches each, that floor is seconds of the bench.
   *
   * SEMANTICS (mirrors FileSystemBasedCheckpointFileManager op-for-op):

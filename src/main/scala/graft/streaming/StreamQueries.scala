@@ -79,6 +79,64 @@ object StreamQueries {
       .withColumn("ts", timestamp_micros(expr("ts div 1000")))
   }
 
+  /** The session confs every drain starts under. They must be in effect at
+    * `start()`: that is when the query clones the session, and the clone
+    * keeps its own copy of the conf for the whole drain.
+    *   - Shuffle partitions set the state-store count: each state partition
+    *     pays a fixed restore/commit file cost per batch, so 2 is the
+    *     measured local sweet spot (r12: ~5 s at 4 partitions vs ~2 s at 2
+    *     for the same 3-wave drain). Results are partition-count-free by
+    *     construction (keyed state is hash-routed; every qs aggregation is
+    *     commutative).
+    *   - The NIO checkpoint manager: the checkpoint root below is always a
+    *     local TempDirs path, so the per-batch offset/commit/state file ops
+    *     skip Hadoop's local FileSystem, whose `RawLocalFileSystem` forks a
+    *     `chmod` process for every file or directory it creates.
+    *   - Artifact isolation off: with it on, each streaming query's cloned
+    *     session (a new session UUID) gets its own executor classloader, and
+    *     Spark's codegen cache is keyed by (classloader, code), so every
+    *     drain would recompile its generated classes (13 for qs3). Off, the clone's
+    *     tasks run on the default classloader and a repeated drain compiles
+    *     nothing. No engine session adds artifacts, so isolation guards
+    *     nothing here. */
+  private val drainConfs = Seq(
+    "spark.sql.shuffle.partitions" -> "2",
+    "spark.sql.streaming.checkpointFileManagerClass" -> classOf[NioCheckpointFileManager].getName,
+    "spark.sql.artifact.isolation.enabled" -> "false")
+
+  /** Per session: the number of live drains, and the values of
+    * [[drainConfs]] before its first drain (None = unset). Guarded by
+    * itself: LocalExecutor builds producers concurrently on one session. */
+  private val liveDrains =
+    scala.collection.mutable.HashMap.empty[SparkSession, (Int, Seq[(String, Option[String])])]
+
+  /** Runs `body` with [[drainConfs]] set on `spark`. One override per
+    * session, refcounted: the first drain saves and sets the confs, the
+    * last one to finish restores them, so overlapping drains leave the
+    * caller's confs as they found them. */
+  private def withDrainConfs[T](spark: SparkSession)(body: => T): T = {
+    liveDrains.synchronized {
+      val (n, saved) = liveDrains.getOrElse(spark, {
+        val set = spark.conf.getAll
+        (0, drainConfs.map { case (k, _) => k -> set.get(k) })
+      })
+      if (n == 0) drainConfs.foreach { case (k, v) => spark.conf.set(k, v) }
+      liveDrains(spark) = (n + 1, saved)
+    }
+    try body
+    finally liveDrains.synchronized {
+      val (n, saved) = liveDrains(spark)
+      if (n > 1) liveDrains(spark) = (n - 1, saved)
+      else {
+        liveDrains.remove(spark)
+        saved.foreach {
+          case (k, Some(v)) => spark.conf.set(k, v)
+          case (k, None) => spark.conf.unset(k)
+        }
+      }
+    }
+  }
+
   /** HARNESS-ONLY sink: `memory` materializes every batch on the driver,
     * which is exactly right for a bounded correctness drive (the driver
     * hashes the result anyway) and exactly wrong for production — a real
@@ -90,27 +148,12 @@ object StreamQueries {
     * as the caller holds the frame, not for the rest of the session. */
   private def runToTable(spark: SparkSession, df: DataFrame, mode: OutputMode): DataFrame = {
     val name = "sink_" + UUID.randomUUID().toString.replace("-", "")
-    // state-store count follows shuffle partitions: per-partition-per-batch
-    // state-store restore/commit carries a fixed file-churn cost, so 2 is
-    // the measured local sweet spot (r12: ~5 s at 4 partitions vs ~2 s at 2
-    // for the same 3-wave drain). Results are partition-count-free by
-    // construction (keyed state is hash-routed; every qs aggregation is
-    // commutative).
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "2")
-    // NIO checkpoint manager (r13, guide §1.2): the checkpoint root below is
-    // always a LOCAL TempDirs path, so the per-batch offset/commit/state
-    // file ops skip the Hadoop FS stack (~25-40 ms/op measured → µs). Set
-    // only for the duration of this query.
-    val fmKey = "spark.sql.streaming.checkpointFileManagerClass"
-    val prevFm = spark.conf.getOption(fmKey)
-    spark.conf.set(fmKey, classOf[NioCheckpointFileManager].getName)
     // deleted after termination (r13, ADVICE): a drained AvailableNow query
     // never reuses its checkpoint, and Spark's own implicit temp checkpoints
     // are deleted on stop — without this a multi-query run accumulates
     // offset/commit/state files in tmpfs RAM until JVM shutdown
     val ckpt = graft.util.TempDirs.create("graft-ckpt")
-    try {
+    try withDrainConfs(spark) {
       val q = df.writeStream.format("memory").queryName(name)
         // explicit checkpoint under the TempDirs root (tmpfs when the host
         // has one): without it Spark creates the temp checkpoint in
@@ -119,14 +162,7 @@ object StreamQueries {
         .option("checkpointLocation", ckpt.toString)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevFm match {
-        case Some(v) => spark.conf.set(fmKey, v)
-        case None => spark.conf.unset(fmKey)
-      }
-      graft.util.TempDirs.deleteTree(ckpt)
-    }
+    } finally graft.util.TempDirs.deleteTree(ckpt)
     val out = spark.table(name)
     spark.catalog.dropTempView(name)
     out

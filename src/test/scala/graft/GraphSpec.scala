@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path}
+import java.nio.file.attribute.PosixFilePermissions
+
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,8 +13,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.exec.LocalExecutor
 import graft.fingerprints.Version
 import graft.graph.{Artifact, Graph, MemoryBackend, Producer}
-import graft.io.Format
-import graft.storage.{FileStorage, PathTemplate}
+import graft.io.{Format, IO}
+import graft.storage.{FileStorage, PathTemplate, StoragePartition}
 import graft.tools.Harness
 import graft.types.ArtiType._
 
@@ -101,6 +104,47 @@ class GraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     val r2 = exec.build(spark, snap2)
     assert(r2.totalBuilt === 0)
     assert(r2.skipped === Map("daily_agg" -> 2, "total_sum" -> 1))
+  }
+
+  test("a cold build of a partitioned graph starts no process") {
+    val base = dir.resolve("spend-noproc")
+    writeSpendFixture(base.resolve("tx"))
+    val (g, backend) = spendGraph(base)
+    val rec = new jdk.jfr.Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r = try new LocalExecutor(backend).build(spark, g.snapshot(spark, backend)) finally rec.stop()
+    val jfr = dir.resolve("noproc.jfr")
+    rec.dump(jfr)
+    rec.close()
+    val started = jdk.jfr.consumer.RecordingFile.readAllEvents(jfr).asScala
+      .map(_.getString("command"))
+    assert(r.built === Map("daily_agg" -> 2, "total_sum" -> 1))
+    assert(started.size === 0, s"e.g. ${started.take(3).mkString("; ")}")
+  }
+
+  test("artifact writes set the same POSIX modes as a plain Hadoop write") {
+    val df = spark.range(20).selectExpr("id", "id % 2 AS k").coalesce(2)
+    val plain = dir.resolve("modes-plain")
+    val nio = dir.resolve("modes-nio")
+    val storage = FileStorage(PathTemplate(s"$nio/{input_fingerprint}", Map.empty))
+    // three new directory levels per write, partitioned and not
+    df.write.parquet(s"$plain/a/b/c")
+    IO.write(df, Format.Parquet, storage, StoragePartition(s"$nio/a/b/c", Map.empty))
+    df.write.partitionBy("k").parquet(s"$plain/d/e")
+    IO.writePartitioned(df, Format.Parquet, s"$nio/d/e", Seq("k"))
+    val uuid = "[0-9a-f]{8}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{4}-[0-9a-f]{12}"
+    def modes(root: Path): Seq[(String, String)] = {
+      val s = Files.walk(root)
+      try s.iterator().asScala.filterNot(_ == root).map { p =>
+        root.relativize(p).toString.replaceAll(uuid, "U") ->
+          PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+      }.toSeq.sorted
+      finally s.close()
+    }
+    val want = modes(plain)
+    assert(want.exists(_._1.endsWith(".crc")) && want.exists(_._1 == "d/e/k=1"))
+    assert(modes(nio) === want)
   }
 
   test("incremental: a new partition rebuilds only itself (+ downstream)") {

@@ -18,7 +18,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no operator or streaming query releases blocks by a
   *     `getPersistentRDDs` scan: under LocalExecutor's concurrent
   *     producers such a scan also sees (and can free) another query's
-  *     blocks. Lineage cuts release through `Queries.lineageCut`'s handle. */
+  *     blocks. Lineage cuts release through `Queries.lineageCut`'s handle;
+  *   - no operator or streaming query writes the drain confs (artifact
+  *     isolation, the checkpoint file manager): they are named once, in
+  *     `StreamQueries.drainConfs`, and set and restored only by
+  *     `runToTable`'s refcounted override. */
 class StructureGateSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -52,5 +56,15 @@ class StructureGateSpec extends AnyFunSuite {
     for (call <- Seq("createOrReplaceTempFunction", "registerFunction", "udf.register",
         "experimental.extraStrategies", "experimental.extraOptimizations"))
       assert(sites(Seq("src/main/scala"), call).forall(_ == "GraftFunctions.scala"), call)
+  }
+
+  test("drain confs are named once under operators/ and streaming/, in StreamQueries.drainConfs") {
+    val roots = Seq("src/main/scala/graft/streaming", "src/main/scala/graft/operators")
+    for ((key, entry) <- Seq(
+        "spark.sql.artifact.isolation.enabled" -> "ARTIFACTS_SESSION_ISOLATION_ENABLED",
+        "spark.sql.streaming.checkpointFileManagerClass" -> "STREAMING_CHECKPOINT_FILE_MANAGER_CLASS")) {
+      assert(sites(roots, "\"" + key + "\"") === Seq("StreamQueries.scala"), key)
+      assert(sites(roots, entry).isEmpty, entry)
+    }
   }
 }
