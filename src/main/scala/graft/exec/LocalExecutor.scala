@@ -11,14 +11,18 @@ import graft.io.IO
 import graft.storage.StoragePartition
 
 /** Per-producer build accounting, used by tests and the incremental-build
-  * queries to prove skip-if-built behavior. `validationFailures` is
-  * populated only on the failure path: a non-empty list aborts `build` with
-  * an IllegalStateException carrying the messages, so reports RETURNED by
-  * build always have it empty. */
-final case class BuildReport(built: Map[String, Int], skipped: Map[String, Int], validationFailures: Seq[String]) {
+  * queries to prove skip-if-built behavior. */
+final case class BuildReport(built: Map[String, Int], skipped: Map[String, Int]) {
   def totalBuilt: Int = built.values.sum
   def totalSkipped: Int = skipped.values.sum
 }
+
+/** What one (producer, output partition) came to in a build. */
+private sealed trait PartitionOutcome
+private case object Built extends PartitionOutcome
+private case object Skipped extends PartitionOutcome
+/** A validation or threshold gate failed; `message` names the producer. */
+private final case class Failed(message: String) extends PartitionOutcome
 
 /** One output of a partition build after its write: staged outputs carry
   * their staging path, bucketed ones (written in place) do not; an
@@ -84,22 +88,18 @@ final class LocalExecutor(backend: Backend,
     val pool = Executors.newFixedThreadPool(math.max(1, parallelism))
     implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
     // None = this producer did not run because something upstream failed
-    val done = mutable.Map.empty[ProducerBinding, Future[Option[Seq[BuildReport]]]]
-    val settled: Seq[Try[Option[Seq[BuildReport]]]] =
+    val done = mutable.Map.empty[ProducerBinding, Future[Option[Seq[PartitionOutcome]]]]
+    val settled: Seq[Try[Option[Seq[PartitionOutcome]]]] =
       try {
         for (b <- order) {
           val upstream = b.inputKeys.flatMap(g.producerOf).distinct.map(done)
           done(b) = Future.sequence(upstream).flatMap { ups =>
-            val upstreamBlocked = ups.exists(_.isEmpty) ||
-              ups.iterator.flatten.flatten.exists(_.validationFailures.nonEmpty)
-            if (upstreamBlocked) Future.successful(None)
+            // blocked: an upstream producer did not run, or failed a partition
+            if (ups.exists(_.forall(_.exists(_.isInstanceOf[Failed])))) Future.successful(None)
             else {
               // `map` routing is driver-side metadata — cheap to compute
               // here, on this producer's own schedule
-              val inputParts: Seq[Seq[StoragePartition]] = b.inputKeys.map { k =>
-                if (g.isRaw(k)) snapshot.rawPartitions(k)
-                else backend.readSnapshotPartitions(snapshot.id, s"${g.name}/$k")
-              }
+              val inputParts = b.inputKeys.map(snapshot.partitions(backend, _))
               Future.traverse(b.producer.map(inputParts)) { case (outKey, partDeps) =>
                 Future(buildPartition(spark, snapshot, b, outKey, partDeps))
               }.map(Some(_))
@@ -114,129 +114,120 @@ final class LocalExecutor(backend: Backend,
       } finally pool.shutdown()
 
     settled.collectFirst { case Failure(e) => e }.foreach(throw _)
-    val reports = settled.collect { case Success(Some(rs)) => rs }.flatten
-    val built = mutable.Map.empty[String, Int].withDefaultValue(0)
-    val skipped = mutable.Map.empty[String, Int].withDefaultValue(0)
-    val failures = mutable.ListBuffer.empty[String]
-    reports.foreach { r =>
-      r.built.foreach { case (k, v) => built(k) += v }
-      r.skipped.foreach { case (k, v) => skipped(k) += v }
-      failures ++= r.validationFailures
+    val outcomes = order.zip(settled).flatMap {
+      case (b, Success(Some(os))) => os.map(b.producer.name -> _)
+      case _ => Nil
     }
+    val failures = outcomes.collect { case (_, Failed(msg)) => msg }
     if (failures.nonEmpty)
       throw new IllegalStateException(s"validate_outputs failed for: ${failures.mkString("; ")}")
-    BuildReport(built.toMap, skipped.toMap, failures.toSeq)
+    def count(o: PartitionOutcome): Map[String, Int] =
+      outcomes.collect { case (name, `o`) => name }.groupBy(identity).map { case (k, v) => k -> v.size }
+    BuildReport(count(Built), count(Skipped))
   }
 
-  /** Build/skip ONE output partition of one producer binding. */
+  /** Build, skip or fail ONE output partition of one producer binding. */
   private def buildPartition(
       spark: SparkSession,
       snapshot: GraphSnapshot,
       binding: ProducerBinding,
       outKey: graft.partitions.PartitionKey.PartitionKey,
-      partDeps: Seq[Seq[StoragePartition]]): BuildReport = {
+      partDeps: Seq[Seq[StoragePartition]]): PartitionOutcome = {
     val g = snapshot.graph
-    val built = mutable.Map.empty[String, Int].withDefaultValue(0)
-    val skipped = mutable.Map.empty[String, Int].withDefaultValue(0)
-    val failures = mutable.ListBuffer.empty[String]
+    val ProducerBinding(producer, inputKeys, outputKeys) = binding
+    def failed(msg: String): PartitionOutcome = Failed(s"${producer.name}: $msg")
+    def checkThresholds(stats: Seq[Map[String, String]]): Either[String, Unit] = {
+      val viol = stats.flatMap(st => Statistics.checkThresholds(producer.thresholds, st).left.toOption)
+      if (viol.isEmpty) Right(()) else Left(viol.mkString("; "))
+    }
+    // input fingerprint: producer id ⊕ content of every dep partition
+    // (reference F11, producers/__init__.py:326-346)
+    val inputFp = producer.fingerprint.combine(
+      Fingerprint.combineAll(partDeps.flatten.map(p => p.contentFingerprint.getOrElse(Fingerprint.identity))))
 
-    locally {
-      val ProducerBinding(producer, inputKeys, outputKeys) = binding
-      locally {
-        // input fingerprint: producer id ⊕ content of every dep partition
-        // (reference F11, producers/__init__.py:326-346)
-        val inputFp = producer.fingerprint.combine(
-          Fingerprint.combineAll(partDeps.flatten.map(p => p.contentFingerprint.getOrElse(Fingerprint.identity))))
-
-        val outArtifacts = outputKeys.map(k => k -> g.artifacts(k))
-        // skip-if-built: every output artifact already has this
-        // (partition_key, input_fingerprint) registered
-        val existing = outArtifacts.map { case (k, _) =>
-          k -> backend.readArtifactPartitions(s"${g.name}/$k", Some(Set(inputFp)))
-            .filter(_.key == outKey)
+    // skip-if-built: every output artifact already has this
+    // (partition_key, input_fingerprint) registered
+    val existing = outputKeys.map { k =>
+      k -> backend.readArtifactPartitions(s"${g.name}/$k", Some(Set(inputFp)))
+        .filter(_.key == outKey)
+    }
+    if (existing.forall(_._2.nonEmpty)) {
+      // F38: thresholds re-check on EVERY run, even memoized skips,
+      // against the stored statistics — they may have been tightened
+      // since the data was built, and that must re-gate without a
+      // rebuild (reference executors/local.py:26-29)
+      val gate =
+        if (producer.thresholds.isEmpty) Right(())
+        else checkThresholds(existing.flatMap { case (k, parts) =>
+          val stored = backend.readStatistics(s"${g.name}/$k")
+          // absent stored statistics must FAIL the gate, not pass it:
+          // checkThresholds against an empty map yields the
+          // "statistic … was not collected" failure, so thresholds
+          // added after a stats-less build force a rebuild/error
+          // instead of silently bypassing the quality gate
+          parts.map(p => stored.getOrElse(p.path, Map.empty[String, String]))
+        })
+      gate match {
+        case Left(msg) => failed(msg)
+        case Right(()) =>
+          existing.foreach { case (k, parts) =>
+            backend.linkSnapshotPartitions(snapshot.id, s"${g.name}/$k", parts)
+          }
+          Skipped
+      }
+    } else {
+      val inputDfs = inputKeys.zip(partDeps).map { case (k, parts) =>
+        val a = g.artifacts(k)
+        IO.read(spark, a.format, a.storage, parts)
+      }
+      val outputs = producer.build(spark, inputDfs)
+      require(outputs.size == outputKeys.size,
+        s"producer '${producer.name}' returned ${outputs.size} outputs for ${outputKeys.size} declared")
+      // WRITE-AUDIT-PUBLISH: each output plan executes exactly ONCE —
+      // into a staging path next to its final location. Statistics are
+      // OBSERVED on that write (Dataset.observe: the profile's
+      // aggregates ride the write job, no profiling pass of their own);
+      // validation then audits the MATERIALIZED staged bytes (a file
+      // scan, not a re-execution of the producer plan), thresholds gate
+      // on the observed profile, and only a passing gate publishes
+      // staging → final with a metadata rename. A failing gate deletes
+      // staging: no byte ever appears at an artifact path past a
+      // failing gate, and validation audits exactly what was written.
+      // Bucketed cluster_by outputs cannot stage (their identity lives
+      // in the catalog, not just the path), so the no-write-past-a-
+      // failing-gate contract is preserved the OLD way for them:
+      // validate the plan BEFORE the bucketed write lands.
+      val conf = spark.sparkContext.hadoopConfiguration
+      val planned = outputKeys.zip(outputs).map { case (k, df) =>
+        val a = g.artifacts(k)
+        val part = a.storage.generatePartition(outKey, inputFp)
+        val clusterBy = a.atype match {
+          case c: graft.types.ArtiType.ACollection
+            if c.clusterBy.nonEmpty && !c.isPartitioned && a.format == graft.io.Format.Parquet =>
+            c.clusterBy
+          case _ => Nil
         }
-        if (existing.forall(_._2.nonEmpty)) {
-          // F38: thresholds re-check on EVERY run, even memoized skips,
-          // against the stored statistics — they may have been tightened
-          // since the data was built, and that must re-gate without a
-          // rebuild (reference executors/local.py:26-29)
-          val thresholdFailures =
-            if (producer.thresholds.isEmpty) Nil
-            else existing.flatMap { case (k, parts) =>
-              val stored = backend.readStatistics(s"${g.name}/$k")
-              // absent stored statistics must FAIL the gate, not pass it:
-              // checkThresholds against an empty map yields the
-              // "statistic … was not collected" failure, so thresholds
-              // added after a stats-less build force a rebuild/error
-              // instead of silently bypassing the quality gate
-              parts.map(p => stored.getOrElse(p.path, Map.empty[String, String]))
-                .flatMap(st => Statistics.checkThresholds(producer.thresholds, st).left.toOption)
-            }
-          if (thresholdFailures.nonEmpty)
-            failures += s"${producer.name}: ${thresholdFailures.mkString("; ")}"
-          else {
-            existing.foreach { case (k, parts) =>
-              backend.linkSnapshotPartitions(snapshot.id, s"${g.name}/$k", parts)
-            }
-            skipped(producer.name) += 1
-          }
-        } else {
-          val inputDfs = inputKeys.zip(partDeps).map { case (k, parts) =>
-            val a = g.artifacts(k)
-            IO.read(spark, a.format, a.storage, parts)
-          }
-          val outputs = producer.build(spark, inputDfs)
-          require(outputs.size == outputKeys.size,
-            s"producer '${producer.name}' returned ${outputs.size} outputs for ${outputKeys.size} declared")
-          // WRITE-AUDIT-PUBLISH: each output plan executes exactly ONCE —
-          // into a staging path next to its final location. Statistics are
-          // OBSERVED on that write (Dataset.observe: the profile's
-          // aggregates ride the write job, no profiling pass of their own);
-          // validation then audits the MATERIALIZED staged bytes (a file
-          // scan, not a re-execution of the producer plan), thresholds gate
-          // on the observed profile, and only a passing gate publishes
-          // staging → final with a metadata rename. A failing gate deletes
-          // staging: no byte ever appears at an artifact path past a
-          // failing gate, and validation audits exactly what was written.
-          // Bucketed cluster_by outputs cannot stage (their identity lives
-          // in the catalog, not just the path), so the no-write-past-a-
-          // failing-gate contract is preserved the OLD way for them:
-          // validate the plan BEFORE the bucketed write lands.
-          val conf = spark.sparkContext.hadoopConfiguration
-          val planned = outputKeys.zip(outputs).map { case (k, df) =>
-            val a = g.artifacts(k)
-            val part = a.storage.generatePartition(outKey, inputFp)
-            val clusterBy = a.atype match {
-              case c: graft.types.ArtiType.ACollection
-                if c.clusterBy.nonEmpty && !c.isPartitioned && a.format == graft.io.Format.Parquet =>
-                c.clusterBy
-              case _ => Nil
-            }
-            (k, a, df, part, clusterBy)
-          }
-          val anyBucketed = planned.exists(_._5.nonEmpty)
-          val wantStats = producer.computeStatistics || producer.thresholds.nonEmpty
-          // Pre-write gate for producers with a bucketed output: bucketed
-          // writes land at the FINAL path and register the catalog table,
-          // so the ENTIRE gate — validation AND thresholds — must pass on
-          // the plan before any byte lands (a post-write threshold check
-          // would leave published bucketed bytes behind a failing gate).
-          // Profiles computed here double as the recorded statistics, so
-          // the plan re-executes once for the gate, once for the write —
-          // the same cost shape as the pre-WAP path this preserves.
-          val prePlanProfiles: Seq[Option[Map[String, String]]] =
-            if (anyBucketed && wantStats) outputs.map(df => Some(Statistics.profile(df)))
-            else planned.map(_ => None)
-          val preGate: Either[String, Unit] =
-            if (!anyBucketed) Right(())
-            else producer.validateOutputs(outputs).flatMap { _ =>
-              val viol = prePlanProfiles.flatten.flatMap(st =>
-                Statistics.checkThresholds(producer.thresholds, st).left.toOption)
-              if (viol.isEmpty) Right(()) else Left(viol.mkString("; "))
-            }
-          if (preGate.isLeft) {
-            failures += s"${producer.name}: ${preGate.left.getOrElse("")}"
-          } else {
+        (k, a, df, part, clusterBy)
+      }
+      val anyBucketed = planned.exists(_._5.nonEmpty)
+      val wantStats = producer.computeStatistics || producer.thresholds.nonEmpty
+      // Pre-write gate for producers with a bucketed output: bucketed
+      // writes land at the FINAL path and register the catalog table,
+      // so the ENTIRE gate — validation AND thresholds — must pass on
+      // the plan before any byte lands (a post-write threshold check
+      // would leave published bucketed bytes behind a failing gate).
+      // Profiles computed here double as the recorded statistics, so
+      // the plan re-executes once for the gate, once for the write —
+      // the same cost shape as the pre-WAP path this preserves.
+      val prePlanProfiles: Seq[Option[Map[String, String]]] =
+        if (anyBucketed && wantStats) outputs.map(df => Some(Statistics.profile(df)))
+        else planned.map(_ => None)
+      val preGate: Either[String, Unit] =
+        if (!anyBucketed) Right(())
+        else producer.validateOutputs(outputs).flatMap(_ => checkThresholds(prePlanProfiles.flatten))
+      preGate match {
+        case Left(msg) => failed(msg)
+        case Right(()) =>
           // audit frames scan the MATERIALIZED staged bytes
           def auditDf(a: Artifact, schema: StructType, path: String) =
             IO.read(spark, a.format, a.storage,
@@ -244,8 +235,8 @@ final class LocalExecutor(backend: Backend,
           val staged = planned.map { case (k, a, df, part, clusterBy) =>
             if (clusterBy.nonEmpty) {
               graft.util.Timing.timed(s"${producer.name}/$k writeBucketed") {
-              IO.writeBucketed(df, a.format, part.path, clusterBy,
-                IO.bucketTableName(g.name, k), overwrite = true)
+                IO.writeBucketed(df, a.format, part.path, clusterBy,
+                  IO.bucketTableName(g.name, k), overwrite = true)
               }
               StagedOutput(k, a, df.schema, part, None, parentPreExisting = false, None)
             } else {
@@ -270,7 +261,7 @@ final class LocalExecutor(backend: Backend,
                 df.observe(o, aggs.head, aggs.tail: _*)
               }
               graft.util.Timing.timed(s"${producer.name}/$k stagingWrite") {
-              IO.write(toWrite, a.format, a.storage, part.copy(path = stagingPath), overwrite = true)
+                IO.write(toWrite, a.format, a.storage, part.copy(path = stagingPath), overwrite = true)
               }
               StagedOutput(k, a, df.schema, part, Some(stagingPath), parentPreExisting, observation)
             }
@@ -299,54 +290,44 @@ final class LocalExecutor(backend: Backend,
               st.staging.fold(plan)(auditDf(st.artifact, st.schema, _))
             })
           }
-          gate match {
+          // F38: the profile is recorded when stats are wanted OR
+          // thresholds gate the publish; violations abort BEFORE the
+          // rename, so nothing is published past a failing threshold.
+          // Bucketed producers recorded their profiles pre-write (the
+          // plan pass that also fed the threshold gate) — reuse them.
+          // Lazy: a failing audit gate profiles nothing.
+          lazy val profiles =
+            if (anyBucketed || !wantStats) prePlanProfiles
+            else staged.map(st => Some(st.observation match {
+              case Some(o) => Statistics.statsOf(o.get)
+              case None => Statistics.profile(auditDf(st.artifact, st.schema, st.staging.get))
+            }))
+          // bucketed producers checked thresholds pre-write on the same profiles
+          gate.flatMap(_ => if (anyBucketed) Right(()) else checkThresholds(profiles.flatten)) match {
             case Left(msg) =>
               dropStaging()
-              failures += s"${producer.name}: $msg"
+              failed(msg)
             case Right(()) =>
-              // F38: the profile is recorded when stats are wanted OR
-              // thresholds gate the publish; violations abort BEFORE the
-              // rename, so nothing is published past a failing threshold.
-              // Bucketed producers recorded their profiles pre-write (the
-              // plan pass that also fed the threshold gate) — reuse them.
-              val profiles =
-                if (anyBucketed || !wantStats) prePlanProfiles
-                else staged.map(st => Some(st.observation match {
-                  case Some(o) => Statistics.statsOf(o.get)
-                  case None => Statistics.profile(auditDf(st.artifact, st.schema, st.staging.get))
-                }))
-              val thresholdFailures =
-                if (anyBucketed) Nil // checked pre-write on the same profiles
-                else profiles.flatten.flatMap(st =>
-                  Statistics.checkThresholds(producer.thresholds, st).left.toOption)
-              if (thresholdFailures.nonEmpty) {
-                dropStaging()
-                failures += s"${producer.name}: ${thresholdFailures.mkString("; ")}"
-              } else {
               graft.util.Timing.timed(s"${producer.name} publish+fingerprint") {
-              staged.zip(profiles).foreach { case (StagedOutput(k, a, _, part, stagingOpt, _, _), prof) =>
-                stagingOpt.foreach { sp =>
-                  val fin = new org.apache.hadoop.fs.Path(part.path)
-                  val fs = fin.getFileSystem(conf)
-                  fs.delete(fin, true) // rebuild of a changed partition
-                  if (fin.getParent != null) fs.mkdirs(fin.getParent)
-                  require(fs.rename(new org.apache.hadoop.fs.Path(sp), fin),
-                    s"publish failed: could not rename $sp -> ${part.path}")
+                staged.zip(profiles).foreach { case (StagedOutput(k, a, _, part, stagingOpt, _, _), prof) =>
+                  stagingOpt.foreach { sp =>
+                    val fin = new org.apache.hadoop.fs.Path(part.path)
+                    val fs = fin.getFileSystem(conf)
+                    fs.delete(fin, true) // rebuild of a changed partition
+                    if (fin.getParent != null) fs.mkdirs(fin.getParent)
+                    require(fs.rename(new org.apache.hadoop.fs.Path(sp), fin),
+                      s"publish failed: could not rename $sp -> ${part.path}")
+                  }
+                  val withFp = part.copy(contentFingerprint =
+                    Some(a.storage.contentFingerprints(spark, Seq(part)).head))
+                  backend.writeArtifactPartitions(s"${g.name}/$k", Seq(withFp))
+                  backend.linkSnapshotPartitions(snapshot.id, s"${g.name}/$k", Seq(withFp))
+                  prof.foreach(st => backend.writeStatistics(s"${g.name}/$k", part.path, st))
                 }
-                val withFp = part.copy(contentFingerprint =
-                  Some(a.storage.contentFingerprints(spark, Seq(part)).head))
-                backend.writeArtifactPartitions(s"${g.name}/$k", Seq(withFp))
-                backend.linkSnapshotPartitions(snapshot.id, s"${g.name}/$k", Seq(withFp))
-                prof.foreach(st => backend.writeStatistics(s"${g.name}/$k", part.path, st))
               }
-              }
-              built(producer.name) += 1
-              }
+              Built
           }
-          }
-        }
       }
     }
-    BuildReport(built.toMap, skipped.toMap, failures.toSeq)
   }
 }

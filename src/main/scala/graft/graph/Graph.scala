@@ -296,10 +296,11 @@ final class Graph(val name: String) {
   }
 
   /** Convenience mirroring the reference's `Graph.build()`
-    * (graphs/__init__.py:147-162): snapshot, then execute incrementally. */
-  def build(spark: SparkSession, backend: Backend, parallelism: Int = 4): (GraphSnapshot, graft.exec.BuildReport) = {
+    * (graphs/__init__.py:147-162): snapshot, then execute incrementally
+    * with the executor's default parallelism. */
+  def build(spark: SparkSession, backend: Backend): (GraphSnapshot, graft.exec.BuildReport) = {
     val snap = snapshot(spark, backend)
-    (snap, new graft.exec.LocalExecutor(backend, parallelism).build(spark, snap))
+    (snap, new graft.exec.LocalExecutor(backend).build(spark, snap))
   }
 
   /** Snapshot: content-address the graph + all raw inputs
@@ -344,15 +345,18 @@ final class Graph(val name: String) {
   }
 }
 
-/** A content-addressed, buildable snapshot of a graph
-  * (reference: graphs/__init__.py:294-385). */
-final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map[String, Seq[StoragePartition]]) {
+/** The read half of a snapshot, one implementation for a live
+  * [[GraphSnapshot]] and a [[RehydratedSnapshot]]: they differ only in
+  * where a key's artifact comes from (the live Graph or the stored
+  * GraphModel) and where its partitions come from. */
+sealed trait SnapshotReads {
+  def id: Fingerprint
+  protected def graphName: String
+  protected def artifact(key: String): Artifact
+  /** Every partition of `key` in this snapshot. */
+  private[graft] def partitions(backend: Backend, key: String): Seq[StoragePartition]
 
-  def tag(backend: Backend, tagName: String, overwrite: Boolean = false): Unit =
-    backend.tag(graph.name, id, tagName, overwrite)
-
-  /** Read an artifact through the snapshot: raw → discovered partitions of
-    * this snapshot; produced → backend-linked partitions (reference F15). */
+  /** Read an artifact through the snapshot (reference F15). */
   def read(spark: SparkSession, backend: Backend, key: String): DataFrame =
     readWhere(spark, backend, key)(_ => true)
 
@@ -364,15 +368,13 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
     * schema (an empty pruned read is a legitimate outcome, e.g. "today's
     * partition isn't there yet"), not an error. */
   def readWhere(spark: SparkSession, backend: Backend, key: String)(pred: PartitionKey => Boolean): DataFrame = {
-    val artifact = graph.artifacts(key)
-    val all =
-      if (graph.isRaw(key)) rawPartitions(key)
-      else backend.readSnapshotPartitions(id, s"${graph.name}/$key")
+    val a = artifact(key)
+    val all = partitions(backend, key)
     val parts = all.filter(p => pred(p.key))
     if (parts.isEmpty && all.nonEmpty)
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.types.SparkTypeSystem.toSpark(artifact.atype) match {
+        graft.types.SparkTypeSystem.toSpark(a.atype) match {
           case st: org.apache.spark.sql.types.StructType => st
           case dt => org.apache.spark.sql.types.StructType(Seq(
             org.apache.spark.sql.types.StructField("value", dt)))
@@ -381,12 +383,12 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
       // clustered artifacts prefer their bucketed catalog table (same
       // files, plus bucket metadata → no Exchange in cluster-key joins);
       // fall back to the plain path scan when the catalog doesn't have it
-      val bucketed = artifact.atype match {
+      val bucketed = a.atype match {
         case c: ArtiType.ACollection if c.clusterBy.nonEmpty && !c.isPartitioned && parts.size == 1 =>
-          IO.readBucketTable(spark, IO.bucketTableName(graph.name, key), parts.head.path)
+          IO.readBucketTable(spark, IO.bucketTableName(graphName, key), parts.head.path)
         case _ => None
       }
-      bucketed.getOrElse(IO.read(spark, artifact.format, artifact.storage, parts))
+      bucketed.getOrElse(IO.read(spark, a.format, a.storage, parts))
     }
   }
 
@@ -396,7 +398,7 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
     * the result. `readAs`/`readScalar` below are sugar over registrations
     * in [[ViewRegistry]], not special cases. */
   def readView[T](spark: SparkSession, backend: Backend, key: String, cls: Class[T]): T = {
-    val a = graph.artifacts(key)
+    val a = artifact(key)
     ViewRegistry.resolve(cls, a.atype).materialize(spark, read(spark, backend, key), a.atype)
   }
 
@@ -404,10 +406,8 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
     * `Dataset[T]` is the engine's analog of the reference's typed python
     * views, views/python.py:215-250). Routed through the per-encoder
     * dataset view so the registry's compatibility gate applies. */
-  def readAs[T: org.apache.spark.sql.Encoder](spark: SparkSession, backend: Backend, key: String): org.apache.spark.sql.Dataset[T] = {
-    val a = graph.artifacts(key)
-    ArtiView.datasetView[T].materialize(spark, read(spark, backend, key), a.atype)
-  }
+  def readAs[T: org.apache.spark.sql.Encoder](spark: SparkSession, backend: Backend, key: String): org.apache.spark.sql.Dataset[T] =
+    ArtiView.datasetView[T].materialize(spark, read(spark, backend, key), artifact(key).atype)
 
   /** Scalar view (reference F33's non-Collection views,
     * views/__init__.py:89-145: an `int`-annotated artifact reads back as an
@@ -424,6 +424,23 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
     }
     readView(spark, backend, key, boxed).asInstanceOf[T]
   }
+}
+
+/** A content-addressed, buildable snapshot of a graph
+  * (reference: graphs/__init__.py:294-385). Raw artifacts read the
+  * partitions discovered when the snapshot was taken; produced ones read
+  * their backend-linked partitions. */
+final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map[String, Seq[StoragePartition]])
+    extends SnapshotReads {
+
+  protected def graphName: String = graph.name
+  protected def artifact(key: String): Artifact = graph.artifacts(key)
+  private[graft] def partitions(backend: Backend, key: String): Seq[StoragePartition] =
+    if (graph.isRaw(key)) rawPartitions(key)
+    else backend.readSnapshotPartitions(id, s"${graph.name}/$key")
+
+  def tag(backend: Backend, tagName: String, overwrite: Boolean = false): Unit =
+    backend.tag(graph.name, id, tagName, overwrite)
 
   /** Write data into a RAW artifact partition through the snapshot
     * (reference F16, graphs/__init__.py:249-291): render the partition path
@@ -450,54 +467,15 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
 /** A snapshot rehydrated from backend METADATA ALONE (F37 read-back —
   * reference `read_graph`/`read_snapshot`, backends/__init__.py:59-81): the
   * stored [[GraphModel]] supplies types/formats/storages, the snapshot's
-  * partition links supply the data paths, so a tag resolves and serves
-  * reads in a process that never constructed the Graph (producers are code
-  * and are NOT rehydrated — a rehydrated snapshot reads, it does not
-  * build). */
-final case class RehydratedSnapshot(model: GraphModel, id: Fingerprint) {
-
-  def read(spark: SparkSession, backend: Backend, key: String): DataFrame =
-    readWhere(spark, backend, key)(_ => true)
-
-  /** Same registry-resolved views as [[GraphSnapshot.readView]] — a
-    * rehydrated artifact materializes through any registered view, so a
-    * tag consumer in a fresh process gets scalars/rows/custom views, not
-    * just frames. */
-  def readView[T](spark: SparkSession, backend: Backend, key: String, cls: Class[T]): T = {
-    val a = model.artifact(key)
-    ViewRegistry.resolve(cls, a.atype).materialize(spark, read(spark, backend, key), a.atype)
-  }
-
-  def readScalar[T](spark: SparkSession, backend: Backend, key: String)(implicit ct: scala.reflect.ClassTag[T]): T = {
-    val boxed: Class[_] = ct.runtimeClass match {
-      case java.lang.Long.TYPE    => classOf[java.lang.Long]
-      case java.lang.Double.TYPE  => classOf[java.lang.Double]
-      case java.lang.Boolean.TYPE => classOf[java.lang.Boolean]
-      case java.lang.Integer.TYPE => classOf[java.lang.Long]
-      case other                  => other
-    }
-    readView(spark, backend, key, boxed).asInstanceOf[T]
-  }
-
-  /** Same partition-pruned contract as [[GraphSnapshot.readWhere]]: the
-    * file-list is filtered before Spark sees it; a predicate matching
-    * nothing yields an empty frame with the declared schema. Raw and
-    * produced artifacts alike resolve through the snapshot's links
-    * (snapshot() links raw partitions too). */
-  def readWhere(spark: SparkSession, backend: Backend, key: String)(pred: PartitionKey => Boolean): DataFrame = {
-    val artifact = model.artifact(key)
-    val all = backend.readSnapshotPartitions(id, s"${model.name}/$key")
-    val parts = all.filter(p => pred(p.key))
-    if (parts.isEmpty && all.nonEmpty)
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        graft.types.SparkTypeSystem.toSpark(artifact.atype) match {
-          case st: org.apache.spark.sql.types.StructType => st
-          case dt => org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("value", dt)))
-        })
-    else IO.read(spark, artifact.format, artifact.storage, parts)
-  }
+  * partition links supply the data paths (snapshot() links raw partitions
+  * too), so a tag resolves and serves reads in a process that never
+  * constructed the Graph (producers are code and are NOT rehydrated — a
+  * rehydrated snapshot reads, it does not build). */
+final case class RehydratedSnapshot(model: GraphModel, id: Fingerprint) extends SnapshotReads {
+  protected def graphName: String = model.name
+  protected def artifact(key: String): Artifact = model.artifact(key)
+  private[graft] def partitions(backend: Backend, key: String): Seq[StoragePartition] =
+    backend.readSnapshotPartitions(id, s"${model.name}/$key")
 }
 
 object RehydratedSnapshot {

@@ -67,8 +67,7 @@ object FrameworkQueries {
       .produce(totalAgg, Seq("daily"), Seq("total"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "total")
   }
 
@@ -169,9 +168,8 @@ object FrameworkQueries {
     val g = new Graph("validated").add("orders", raw).add("out", out)
       .produce(gated, Seq("orders"), Seq("out")).close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
     // a failing gate would abort build() with IllegalStateException
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "out")
   }
 
@@ -264,8 +262,7 @@ object FrameworkQueries {
       .produce(split, Seq("orders"), Seq("by_status", "by_priority"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "by_status")
       .select(lit("by_status").as("which"), col("o_orderstatus").as("k"), col("total").as("v"))
       .unionByName(snap.read(spark, backend, "by_priority")
@@ -324,8 +321,7 @@ object FrameworkQueries {
       .produce(selP, Seq("customer"), Seq("cust_sel"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "ord_sum")
       .join(snap.read(spark, backend, "cust_sel"),
         col("o_custkey") === col("c_custkey"))
@@ -407,8 +403,7 @@ object FrameworkQueries {
       .produce(corpusStats, Seq("clean"), Seq("stats"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "stats")
   }
 
@@ -472,8 +467,7 @@ object FrameworkQueries {
       .produce(regionAgg, Seq("nation"), Seq("by_region"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     snap.read(spark, backend, "by_region")
   }
 
@@ -599,8 +593,7 @@ object FrameworkQueries {
       .produce(serveP, Seq("embeddings", "codebook", "codes"), Seq("hits"))
       .close()
     val backend = new MemoryBackend
-    val snap = g.snapshot(spark, backend)
-    new LocalExecutor(backend).build(spark, snap)
+    val (snap, _) = g.build(spark, backend)
     // every artifact is written (materialized) by build(); release the
     // producer-local caches before handing the result out
     pinned.foreach(_.unpersist(false))

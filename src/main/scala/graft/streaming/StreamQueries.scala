@@ -2764,7 +2764,9 @@ object StreamQueries {
         .coalesce(1).write.parquet(src.resolve(s"wave-$i").toString)
       Thread.sleep(5)
     }
-    def runIngest(): Long = {
+    // drain confs as in runToTable: with artifact isolation on, every run's
+    // cloned session would recompile the ingest's generated classes
+    def runIngest(): Long = withDrainConfs(spark) {
       val q = spark.readStream.schema(eventsRawSchema)
         .option("recursiveFileLookup", "true")
         .parquet(src.toString)

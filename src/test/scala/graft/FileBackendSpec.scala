@@ -2,15 +2,15 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.exec.LocalExecutor
 import graft.fingerprints.Fingerprint
-import graft.graph.{Artifact, FileBackend, Graph, Producer}
-import graft.io.Format
+import graft.graph.{Artifact, FileBackend, Graph, Producer, RehydratedSnapshot}
+import graft.io.{Format, IO}
 import graft.partitions.PartitionField.{DateField, IntField, NullField}
 import graft.storage.{FileStorage, PathTemplate, StoragePartition}
 import graft.tools.Harness
@@ -132,6 +132,61 @@ class FileBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pruned = rehydrated.readWhere(spark, b2, "tx")(
       _.get("date").contains(graft.partitions.PartitionField.DateField(java.time.LocalDate.of(1999, 1, 1))))
     assert(pruned.isEmpty && pruned.schema.fieldNames.toSeq === Seq("id", "date", "amount"))
+  }
+
+  test("a rehydrated snapshot reads exactly what the live snapshot reads") {
+    val base = Files.createTempDirectory("graft-fb-parity")
+    Files.createDirectories(base.resolve("tx"))
+    for ((day, id, amount) <- Seq(("1970-01-01", 1, 10.0), ("1970-01-02", 2, 32.0)))
+      Files.writeString(base.resolve("tx").resolve(s"$day.json"),
+        s"""{"id": $id, "date": "$day", "amount": $amount}""")
+    val tx = Artifact(
+      ACollection("transactions",
+        AStruct("tx", Seq("id" -> AInt64(), "date" -> ADate(), "amount" -> AFloat64())),
+        partitionBy = Seq("date")),
+      Format.Json, FileStorage(PathTemplate(s"$base/tx/{date.iso}.json", Map("date" -> "date"))))
+    val byId = Artifact(
+      ACollection("by_id", AStruct("by_id", Seq("id" -> AInt64(), "amount" -> AFloat64())),
+        clusterBy = Seq("id")),
+      Format.Parquet, FileStorage(PathTemplate(s"$base/by_id/{input_fingerprint}", Map.empty)))
+    val total = Artifact(AFloat64(), Format.Json,
+      FileStorage(PathTemplate(s"$base/total/{input_fingerprint}", Map.empty)))
+    val g = new Graph("parity").add("tx", tx).add("by_id", byId).add("total", total)
+      .produce(Producer("by_id", build = (_, ins) => Seq(ins.head.select("id", "amount"))),
+        Seq("tx"), Seq("by_id"))
+      .produce(Producer("total", build = (_, ins) =>
+        Seq(ins.head.agg(sum(col("amount")).as("value")).coalesce(1))), Seq("tx"), Seq("total"))
+      .close()
+    val metaDir = base.resolve("meta").toString
+    val b = new FileBackend(metaDir)
+    val (live, _) = g.build(spark, b)
+    live.tag(b, "v1")
+    val b2 = new FileBackend(metaDir)
+    val re = RehydratedSnapshot.fromTag(b2, "parity", "v1")
+
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val day2 = DateField(java.time.LocalDate.of(1970, 1, 2))
+    for ((key, matching) <- Seq[(String, graft.partitions.PartitionKey.PartitionKey => Boolean)](
+        "tx" -> (_.get("date").contains(day2)), "by_id" -> (_.isEmpty), "total" -> (_.isEmpty))) {
+      val liveAll = rows(live.read(spark, b, key))
+      assert(liveAll.nonEmpty, key)
+      assert(rows(re.read(spark, b2, key)) === liveAll, key)
+      val liveMatch = rows(live.readWhere(spark, b, key)(matching))
+      assert(liveMatch.nonEmpty, key)
+      assert(rows(re.readWhere(spark, b2, key)(matching)) === liveMatch, key)
+      val (liveNone, reNone) = (live.readWhere(spark, b, key)(_ => false), re.readWhere(spark, b2, key)(_ => false))
+      assert(liveNone.isEmpty && reNone.isEmpty, key)
+      assert(reNone.schema === liveNone.schema, key)
+    }
+    assert(rows(live.readWhere(spark, b, "tx")(_.get("date").contains(day2))).size === 1)
+    // both snapshots read the clustered artifact through its bucketed table
+    for (df <- Seq(live.read(spark, b, "by_id"), re.read(spark, b2, "by_id")))
+      assert(df.queryExecution.analyzed.toString.contains(IO.bucketTableName("parity", "by_id")))
+    import spark.implicits._
+    assert(re.readAs[(Long, Double)](spark, b2, "by_id").collect().sorted ===
+      live.readAs[(Long, Double)](spark, b, "by_id").collect().sorted)
+    assert(re.readScalar[Double](spark, b2, "total") === 42.0)
+    assert(live.readScalar[Double](spark, b, "total") === 42.0)
   }
 
   test("torn trailing line is ignored; corrupt complete record fails loudly") {

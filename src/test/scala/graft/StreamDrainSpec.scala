@@ -43,6 +43,14 @@ class StreamDrainSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(second === first && first.nonEmpty)
   }
 
+  test("a repeated qs9 ingest compiles no generated class") {
+    val first = rows("qs9_stream_incremental_ingest")
+    val c0 = compiled
+    val second = rows("qs9_stream_incremental_ingest")
+    assert(compiled - c0 === 0)
+    assert(second === first && first.nonEmpty)
+  }
+
   test("overlapping drains leave the session's confs as they found them") {
     val before = drainConfs.map(spark.conf.getOption)
     val (seq3, seq7) = (rows("qs3_stream_state"), rows("qs7_stream_dedup_ingest"))

@@ -22,7 +22,10 @@ import org.scalatest.funsuite.AnyFunSuite
   *   - no operator or streaming query writes the drain confs (artifact
   *     isolation, the checkpoint file manager): they are named once, in
   *     `StreamQueries.drainConfs`, and set and restored only by
-  *     `runToTable`'s refcounted override. */
+  *     `StreamQueries.withDrainConfs`'s refcounted override, around every
+  *     drain (`runToTable`) and each of qs9's ingest runs;
+  *   - a live and a rehydrated snapshot read through one implementation:
+  *     one `readWhere` and one `readScalar` under graph/. */
 class StructureGateSpec extends AnyFunSuite {
 
   private def scalaFiles(root: String): Seq[Path] = {
@@ -66,5 +69,10 @@ class StructureGateSpec extends AnyFunSuite {
       assert(sites(roots, "\"" + key + "\"") === Seq("StreamQueries.scala"), key)
       assert(sites(roots, entry).isEmpty, entry)
     }
+  }
+
+  test("one snapshot-read implementation under graph/") {
+    for (call <- Seq("def readWhere(", "def readScalar"))
+      assert(sites(Seq("src/main/scala/graft/graph"), call) === Seq("Graph.scala"), call)
   }
 }
