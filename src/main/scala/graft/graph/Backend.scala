@@ -1,6 +1,7 @@
 package graft.graph
 
 import scala.collection.concurrent.TrieMap
+import scala.collection.mutable
 
 import graft.fingerprints.Fingerprint
 import graft.storage.StoragePartition
@@ -60,11 +61,31 @@ final class MemoryBackend extends Backend {
 
   def snapshotForTag(graphName: String, tag: String): Option[Fingerprint] = tags.get((graphName, tag))
 
+  /** `parts` less those `cur` already holds and repeats within `parts`,
+    * by the (path, key, inputFingerprint) dedup key: what a set-union write
+    * of `parts` adds. */
+  private def unseen(cur: Seq[StoragePartition], parts: Seq[StoragePartition]): Seq[StoragePartition] = {
+    val seen = mutable.Set.from(cur.map(p => (p.path, p.key, p.inputFingerprint)))
+    parts.filter(p => seen.add((p.path, p.key, p.inputFingerprint)))
+  }
+
+  // what a write would change, for FileBackend's log-only-changes rule
+  private[graph] def holdsGraph(name: String, fingerprint: Fingerprint): Boolean =
+    graphs.get(name).contains(fingerprint)
+  private[graph] def holdsSnapshot(graphName: String, id: Fingerprint): Boolean =
+    snapshots.contains((graphName, id))
+  private[graph] def newArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Seq[StoragePartition] =
+    unseen(artifactParts.getOrElse(artifactKey, Vector.empty), parts)
+  private[graph] def newSnapshotPartitions(
+      snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Seq[StoragePartition] =
+    unseen(snapshotParts.getOrElse((snapshotId, artifactKey), Vector.empty), parts)
+  private[graph] def holdsStatistics(artifactKey: String, partitionPath: String, s: Map[String, String]): Boolean =
+    stats.get((artifactKey, partitionPath)).contains(s)
+
   def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit =
     artifactParts.updateWith(artifactKey) { existing =>
       val cur = existing.getOrElse(Vector.empty)
-      val seen = cur.map(p => (p.path, p.key, p.inputFingerprint)).toSet
-      Some(cur ++ parts.filterNot(p => seen((p.path, p.key, p.inputFingerprint))))
+      Some(cur ++ unseen(cur, parts))
     }
 
   def readArtifactPartitions(artifactKey: String, inputFingerprints: Option[Set[Fingerprint]]): Seq[StoragePartition] = {
@@ -75,8 +96,7 @@ final class MemoryBackend extends Backend {
   def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit =
     snapshotParts.updateWith((snapshotId, artifactKey)) { existing =>
       val cur = existing.getOrElse(Vector.empty)
-      val seen = cur.map(p => (p.path, p.key, p.inputFingerprint)).toSet
-      Some(cur ++ parts.filterNot(p => seen((p.path, p.key, p.inputFingerprint))))
+      Some(cur ++ unseen(cur, parts))
     }
 
   def readSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String): Seq[StoragePartition] =

@@ -16,7 +16,8 @@ import graft.util.MiniJson._
 /** Durable metadata backend (reference F37 — the reference ships only the
   * in-memory backend with real stores left TODO, backends/__init__.py:20-23):
   * the same contract as [[MemoryBackend]], persisted as append-only JSONL
-  * event logs under a directory and replayed on construction. Metadata is
+  * event logs under a directory and replayed on construction; a write
+  * appends only the records that change the replayed state. Metadata is
   * driver-scale (one record per partition, not per row), so a local/object
   * store file is the right shape; skip-if-built memoization now survives
   * process restarts — a property the reference never had.
@@ -29,6 +30,10 @@ final class FileBackend(dir: String) extends Backend {
   }
   private val mem = new MemoryBackend
   private val lock = new Object
+
+  /** Each graph's last logged model encoding: replay rebuilds the model
+    * from it, so an equal encoding changes nothing. */
+  private val modelJson = scala.collection.mutable.HashMap.empty[String, String]
 
   // ---- JSON codec (MiniJson): typed partition fields and keys nest as
   // objects; the model rides as ONE string value (ModelCodec's own JSON) ----
@@ -81,8 +86,8 @@ final class FileBackend(dir: String) extends Backend {
     }
   }
 
-  private def append(file: String, record: J): Unit = lock.synchronized {
-    Files.write(root.resolve(file), (MiniJson.render(record) + "\n").getBytes(StandardCharsets.UTF_8),
+  private def append(file: String, records: J*): Unit = if (records.nonEmpty) lock.synchronized {
+    Files.write(root.resolve(file), records.map(MiniJson.render(_) + "\n").mkString.getBytes(StandardCharsets.UTF_8),
       StandardOpenOption.CREATE, StandardOpenOption.APPEND)
   }
 
@@ -131,59 +136,85 @@ final class FileBackend(dir: String) extends Backend {
     replay("stats.jsonl")(m =>
       mem.writeStatistics(m("artifact").str, m("path").str, m("stats").obj.map { case (k, v) => k -> v.str }))
     // last write per graph wins
-    replay("models.jsonl")(m => mem.writeGraphModel(ModelCodec.decode(m("model").str)))
+    replay("models.jsonl") { m =>
+      val json = m("model").str
+      val model = ModelCodec.decode(json)
+      mem.writeGraphModel(model)
+      modelJson(model.name) = json
+    }
   }
 
   // ---- Backend contract: write-through to log + memory projection ----
-  def writeGraph(name: String, fingerprint: Fingerprint): Unit = {
-    append("graphs.jsonl", JObj.of("name" -> JStr(name), "fp" -> JNum(fingerprint.key)))
-    mem.writeGraph(name, fingerprint)
+  // A write is logged only when it changes what replay would rebuild: a
+  // set-union record whose dedup key the projection already holds, or a
+  // last-write-wins record equal to the current value, is dropped, so a
+  // no-op rebuild appends nothing. Check, append and projection update run
+  // as one step under `lock`: LocalExecutor's producers write concurrently.
+
+  def writeGraph(name: String, fingerprint: Fingerprint): Unit = lock.synchronized {
+    if (!mem.holdsGraph(name, fingerprint)) {
+      append("graphs.jsonl", JObj.of("name" -> JStr(name), "fp" -> JNum(fingerprint.key)))
+      mem.writeGraph(name, fingerprint)
+    }
   }
 
-  def writeSnapshot(graphName: String, id: Fingerprint): Unit = {
-    append("snapshots.jsonl", JObj.of("graph" -> JStr(graphName), "id" -> JNum(id.key)))
-    mem.writeSnapshot(graphName, id)
+  def writeSnapshot(graphName: String, id: Fingerprint): Unit = lock.synchronized {
+    if (!mem.holdsSnapshot(graphName, id)) {
+      append("snapshots.jsonl", JObj.of("graph" -> JStr(graphName), "id" -> JNum(id.key)))
+      mem.writeSnapshot(graphName, id)
+    }
   }
 
-  def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = {
+  def tag(graphName: String, id: Fingerprint, tag: String, overwrite: Boolean): Unit = lock.synchronized {
+    val changed = !mem.snapshotForTag(graphName, tag).contains(id)
     mem.tag(graphName, id, tag, overwrite) // throws on conflict BEFORE logging
-    append("tags.jsonl", JObj.of("graph" -> JStr(graphName), "tag" -> JStr(tag), "id" -> JNum(id.key)))
+    if (changed)
+      append("tags.jsonl", JObj.of("graph" -> JStr(graphName), "tag" -> JStr(tag), "id" -> JNum(id.key)))
   }
 
   def snapshotForTag(graphName: String, tag: String): Option[Fingerprint] =
     mem.snapshotForTag(graphName, tag)
 
-  def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit = {
-    parts.foreach(p =>
-      append("artifact_parts.jsonl", JObj.of("artifact" -> JStr(artifactKey), "part" -> encodePartition(p))))
-    mem.writeArtifactPartitions(artifactKey, parts)
+  def writeArtifactPartitions(artifactKey: String, parts: Seq[StoragePartition]): Unit = lock.synchronized {
+    val fresh = mem.newArtifactPartitions(artifactKey, parts)
+    append("artifact_parts.jsonl",
+      fresh.map(p => JObj.of("artifact" -> JStr(artifactKey), "part" -> encodePartition(p))): _*)
+    mem.writeArtifactPartitions(artifactKey, fresh)
   }
 
   def readArtifactPartitions(artifactKey: String, inputFingerprints: Option[Set[Fingerprint]]): Seq[StoragePartition] =
     mem.readArtifactPartitions(artifactKey, inputFingerprints)
 
-  def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit = {
-    parts.foreach(p =>
-      append("snapshot_parts.jsonl", JObj.of("snapshot" -> JNum(snapshotId.key),
-        "artifact" -> JStr(artifactKey), "part" -> encodePartition(p))))
-    mem.linkSnapshotPartitions(snapshotId, artifactKey, parts)
-  }
+  def linkSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String, parts: Seq[StoragePartition]): Unit =
+    lock.synchronized {
+      val fresh = mem.newSnapshotPartitions(snapshotId, artifactKey, parts)
+      append("snapshot_parts.jsonl", fresh.map(p => JObj.of("snapshot" -> JNum(snapshotId.key),
+        "artifact" -> JStr(artifactKey), "part" -> encodePartition(p))): _*)
+      mem.linkSnapshotPartitions(snapshotId, artifactKey, fresh)
+    }
 
   def readSnapshotPartitions(snapshotId: Fingerprint, artifactKey: String): Seq[StoragePartition] =
     mem.readSnapshotPartitions(snapshotId, artifactKey)
 
-  def writeStatistics(artifactKey: String, partitionPath: String, stats: Map[String, String]): Unit = {
-    append("stats.jsonl", JObj.of("artifact" -> JStr(artifactKey), "path" -> JStr(partitionPath),
-      "stats" -> JObj(stats.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) })))
-    mem.writeStatistics(artifactKey, partitionPath, stats)
-  }
+  def writeStatistics(artifactKey: String, partitionPath: String, stats: Map[String, String]): Unit =
+    lock.synchronized {
+      if (!mem.holdsStatistics(artifactKey, partitionPath, stats)) {
+        append("stats.jsonl", JObj.of("artifact" -> JStr(artifactKey), "path" -> JStr(partitionPath),
+          "stats" -> JObj(stats.toSeq.sortBy(_._1).map { case (k, v) => k -> JStr(v) })))
+        mem.writeStatistics(artifactKey, partitionPath, stats)
+      }
+    }
 
   def readStatistics(artifactKey: String): Map[String, Map[String, String]] =
     mem.readStatistics(artifactKey)
 
-  def writeGraphModel(model: GraphModel): Unit = {
-    append("models.jsonl", JObj.of("graph" -> JStr(model.name), "model" -> JStr(ModelCodec.encode(model))))
-    mem.writeGraphModel(model)
+  def writeGraphModel(model: GraphModel): Unit = lock.synchronized {
+    val json = ModelCodec.encode(model)
+    if (!modelJson.get(model.name).contains(json)) {
+      append("models.jsonl", JObj.of("graph" -> JStr(model.name), "model" -> JStr(json)))
+      mem.writeGraphModel(model)
+      modelJson(model.name) = json
+    }
   }
 
   def readGraphModel(graphName: String): Option[GraphModel] = mem.readGraphModel(graphName)

@@ -1,5 +1,6 @@
 package graft.graph
 
+import scala.collection.concurrent.TrieMap
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -7,7 +8,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.fingerprints.{Canonical, Fingerprint, Version}
 import graft.io.{Format, IO}
 import graft.partitions.PartitionKey.{NotPartitioned, PartitionKey}
-import graft.storage.{FileStorage, Storage, StoragePartition}
+import graft.storage.{ContentHash, FileStorage, Storage, StoragePartition}
 import graft.types.ArtiType
 
 /** A typed, formatted, stored dataset template
@@ -308,17 +309,25 @@ final class Graph(val name: String) {
   def snapshot(spark: SparkSession, backend: Backend): GraphSnapshot = {
     val conf = spark.sparkContext.hadoopConfiguration
     val raws = _artifacts.toSeq.filter { case (k, _) => isRaw(k) }
-    val rawPartitions: Map[String, Seq[StoragePartition]] = raws.map { case (k, a) =>
+    val discovered = raws.map { case (k, a) =>
       val parts = a.storage.discoverPartitions(conf)
       if (parts.isEmpty)
         throw new IllegalStateException(s"raw artifact '$k' has no data — cannot snapshot (reference graphs/__init__.py:345-347)")
-      // batched, cluster-capable hashing: at 100 TB this is Spark jobs
-      // (one task per data file), never a driver byte-stream
-      val fps = graft.util.Timing.timed(s"snapshot/$name/$k contentFingerprints(${parts.size})") {
-        a.storage.contentFingerprints(spark, parts)
-      }
-      val withFps = parts.zip(fps).map { case (p, fp) => p.copy(contentFingerprint = Some(fp)) }
-      k -> withFps
+      (k, a.storage, parts)
+    }
+    // batched, cluster-capable hashing: every FileStorage partition of every
+    // raw artifact goes through ONE call (one parallel driver pass for the
+    // small ones, one Spark job with a task per data file for the large
+    // ones); at 100 TB that is Spark tasks, never a driver byte-stream
+    val (files, others) = discovered.partition(_._2.isInstanceOf[FileStorage])
+    val fileFps = graft.util.Timing.timed(s"snapshot/$name contentFingerprints(${files.map(_._3.size).sum})") {
+      ContentHash.forPartitions(spark, files.flatMap(_._3))
+    }.iterator
+    val fps: Map[String, Seq[Fingerprint]] =
+      files.map { case (k, _, parts) => k -> Seq.fill(parts.size)(fileFps.next()) }.toMap ++
+        others.map { case (k, storage, parts) => k -> storage.contentFingerprints(spark, parts) }
+    val rawPartitions: Map[String, Seq[StoragePartition]] = discovered.map { case (k, _, parts) =>
+      k -> parts.zip(fps(k)).map { case (p, fp) => p.copy(contentFingerprint = Some(fp)) }
     }.toMap
     val nodeFps = _artifacts.toSeq.map { case (k, a) => Fingerprint.fromString(k).combine(a.fingerprint) } ++
       _bindings.map(b => b.producer.fingerprint.combine(Canonical.fingerprint((b.inputKeys, b.outputKeys))))
@@ -428,16 +437,22 @@ sealed trait SnapshotReads {
 
 /** A content-addressed, buildable snapshot of a graph
   * (reference: graphs/__init__.py:294-385). Raw artifacts read the
-  * partitions discovered when the snapshot was taken; produced ones read
-  * their backend-linked partitions. */
+  * partitions discovered when the snapshot was taken plus those written
+  * through it since; produced ones read their backend-linked partitions. */
 final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map[String, Seq[StoragePartition]])
     extends SnapshotReads {
+
+  /** Raw partitions written through [[write]], per key. A write to a
+    * discovered path replaces that partition: its bytes changed. */
+  private val written = TrieMap.empty[String, Vector[StoragePartition]]
 
   protected def graphName: String = graph.name
   protected def artifact(key: String): Artifact = graph.artifacts(key)
   private[graft] def partitions(backend: Backend, key: String): Seq[StoragePartition] =
-    if (graph.isRaw(key)) rawPartitions(key)
-    else backend.readSnapshotPartitions(id, s"${graph.name}/$key")
+    if (graph.isRaw(key)) {
+      val mine = written.getOrElse(key, Vector.empty)
+      rawPartitions(key).filterNot(p => mine.exists(_.path == p.path)) ++ mine
+    } else backend.readSnapshotPartitions(id, s"${graph.name}/$key")
 
   def tag(backend: Backend, tagName: String, overwrite: Boolean = false): Unit =
     backend.tag(graph.name, id, tagName, overwrite)
@@ -445,7 +460,8 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
   /** Write data into a RAW artifact partition through the snapshot
     * (reference F16, graphs/__init__.py:249-291): render the partition path
     * from the key, dispatch the writer, hash the content, register in the
-    * backend and link to this snapshot. Produced artifacts are written only
+    * backend and link to this snapshot, whose reads and builds then see the
+    * partition as a rehydrated copy does. Produced artifacts are written only
     * by their producer (via the executor). */
   def write(
       spark: SparkSession,
@@ -460,6 +476,7 @@ final case class GraphSnapshot(graph: Graph, id: Fingerprint, rawPartitions: Map
     val withFp = part.copy(contentFingerprint = Some(a.storage.contentFingerprints(spark, Seq(part)).head))
     backend.writeArtifactPartitions(s"${graph.name}/$key", Seq(withFp))
     backend.linkSnapshotPartitions(id, s"${graph.name}/$key", Seq(withFp))
+    written.updateWith(key)(cur => Some(cur.getOrElse(Vector.empty).filterNot(_.path == withFp.path) :+ withFp))
     withFp
   }
 }

@@ -1597,12 +1597,15 @@ private[operators] trait QueriesDedup { this: Queries.type =>
     val sh3 = Tables.documents(spark, dir)
       .select(col("doc_id"), toks(col("text")).as("tk"))
       .join(broadcast(members), Seq("doc_id"), "left_semi")
+      // a doc has a trigram iff it has 3 tokens. Filtering on the tokens,
+      // not on size(sh), keeps the shingle lambda out of the predicate
+      // Catalyst pushes below the projection and the semi join, where it
+      // ran for every document instead of pair members only
+      .filter(size(col("tk")) >= 3)
       .select(col("doc_id"), expr(
-        """CASE WHEN size(tk) < 3 THEN array()
-          |ELSE array_distinct(transform(sequence(1, size(tk) - 2),
+        """array_distinct(transform(sequence(1, size(tk) - 2),
           |  i -> concat(element_at(tk, i), ' ', element_at(tk, i + 1),
-          |              ' ', element_at(tk, i + 2)))) END""".stripMargin).as("sh"))
-      .filter(size(col("sh")) > 0)
+          |              ' ', element_at(tk, i + 2))))""".stripMargin).as("sh"))
       // ONE codegen pass for all 32 components (r12 opt): the interpreted
       // transform(sequence(0,31), i -> array_min(transform(sh, ...))) form
       // paid 1 + 32·|sh| lambda dispatches plus a per-shingle concat

@@ -23,10 +23,20 @@ import graft.io.IO
   * instead of trusting any conf.
   */
 object Tables {
+  /** The events file, read with `nanosAsLong` on. The pinned Spark 4.1.2
+    * rejects an INT64 TIMESTAMP(NANOS, adjusted=false) column without it
+    * (PARQUET_TYPE_ILLEGAL), both at schema resolution and in the scan
+    * tasks, which take the conf from the session when the query executes.
+    * So the setting must outlive this call: it is the one session conf a
+    * registry query sets, and µs-precision files read the same either way. */
+  private def eventsParquet(spark: SparkSession, dir: String): DataFrame = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    IO.readParquet(spark, s"$dir/events.parquet")
+  }
+
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = name match {
     case "events" =>
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val raw = IO.readParquet(spark, s"$dir/events.parquet")
+      val raw = eventsParquet(spark, dir)
       raw.schema("ts").dataType match {
         // ns-long division truncates to µs (double division would lose
         // precision — epoch nanos ~1.7e18 exceed 2^53)
@@ -45,8 +55,7 @@ object Tables {
     * truncated, so the reconstructed ns value is the µs value × 1000 —
     * downstream µs conversions agree with the batch reader exactly. */
   def eventsRawNs(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = IO.readParquet(spark, s"$dir/events.parquet")
+    val raw = eventsParquet(spark, dir)
     raw.schema("ts").dataType match {
       case LongType => raw
       // session timezone is pinned UTC in every entry point, so the

@@ -4,6 +4,10 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import java.security.MessageDigest
+import java.util.concurrent.{Callable, ExecutionException, ExecutorService, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
 
 import graft.fingerprints.Fingerprint
 import graft.partitions.PartitionKey.PartitionKey
@@ -86,11 +90,36 @@ object ContentHash {
     else Seq(root -> st.getLen)
   }
 
+  /** Driver-side hashing threads: one pool per JVM, created on first use,
+    * one daemon thread per core. A task hashes one file and never waits on
+    * the pool, so concurrent callers (LocalExecutor's producers) share it
+    * without deadlock. */
+  private lazy val driverPool: ExecutorService = {
+    val n = new AtomicInteger
+    Executors.newFixedThreadPool(Runtime.getRuntime.availableProcessors(), { (r: Runnable) =>
+      val t = new Thread(r, s"graft-content-hash-${n.incrementAndGet()}")
+      t.setDaemon(true)
+      t
+    })
+  }
+
+  /** `fileFp` of each file, aligned with `files`, read on the driver: one
+    * pool task per file when there is more than one. */
+  private def hashOnDriver(fsOf: Path => FileSystem, files: Seq[(Path, Long)]): Seq[Fingerprint] = {
+    def one(f: Path, len: Long): Fingerprint = fileFp(f.getName, len, sha256(fsOf(f), f))
+    if (files.size <= 1) files.map { case (f, len) => one(f, len) }
+    else driverPool.invokeAll(files.map { case (f, len) => (() => one(f, len)): Callable[Fingerprint] }.asJava)
+      .asScala.toSeq.map { fut =>
+        try fut.get() catch { case e: ExecutionException => throw e.getCause }
+      }
+  }
+
   def partitionFingerprint(fs: FileSystem, root: Path): Fingerprint =
-    Fingerprint.combineAll(dataFiles(fs, root).map { case (f, len) => fileFp(f.getName, len, sha256(fs, f)) })
+    Fingerprint.combineAll(hashOnDriver(_ => fs, dataFiles(fs, root)))
 
   /** Hash many partitions, returning fingerprints aligned with `parts`.
-    * Small partitions stream on the driver; everything else becomes a single
+    * Small partitions stream on the driver, their files in parallel on the
+    * driver pool; everything else becomes a single
     * Spark job whose tasks re-open the file via a rebuilt Hadoop conf
     * (Configuration is not serializable; its entries are broadcast). A
     * multi-file parquet partition parallelizes per part-file — the common
@@ -106,12 +135,12 @@ object ContentHash {
     }
     val (small, large) = listed.partition(_._2.map(_._2).sum <= threshold)
     val out = new Array[Fingerprint](parts.size)
-    small.foreach { case (i, files) =>
-      val fs = new Path(parts(i).path).getFileSystem(conf)
-      out(i) = Fingerprint.combineAll(files.map { case (f, len) => fileFp(f.getName, len, sha256(fs, f)) })
-    }
+    // every small partition's files hash in ONE parallel driver pass
+    val smallFiles = small.flatMap { case (i, files) => files.map(i -> _) }
+    val smallFps = hashOnDriver(_.getFileSystem(conf), smallFiles.map(_._2))
+    small.foreach { case (i, _) => out(i) = Fingerprint.identity }
+    smallFiles.zip(smallFps).foreach { case ((i, _), fp) => out(i) = out(i).combine(fp) }
     if (large.nonEmpty) {
-      import scala.jdk.CollectionConverters._
       val confEntries = conf.iterator().asScala.map(e => e.getKey -> e.getValue).toArray
       val bc = spark.sparkContext.broadcast(confEntries)
       val work = large.flatMap { case (i, files) =>

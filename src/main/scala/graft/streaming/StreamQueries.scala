@@ -23,8 +23,8 @@ import graft.operators.Queries.Q
   */
 object StreamQueries {
 
-  /** events schema as the streaming source sees it: ns timestamps surface as
-    * LongType under nanosAsLong (same trick as Tables.events). */
+  /** events schema as the streaming source sees it: the source files carry
+    * `ts` as a plain BIGINT of ns (written from `Tables.eventsRawNs`). */
   private val eventsRawSchema = StructType(Seq(
     StructField("event_id", LongType), StructField("ts", LongType),
     StructField("user_id", LongType), StructField("event_type", StringType),
@@ -42,7 +42,6 @@ object StreamQueries {
   private val sourceCache = scala.collection.concurrent.TrieMap.empty[(String, Int), String]
 
   private def eventsStream(spark: SparkSession, dir: String, nFiles: Int = 1): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val src = sourceCache.getOrElseUpdate((dir, nFiles), {
       val fresh = graft.util.TempDirs.create("graft-stream")
       if (nFiles <= 1) {
@@ -2751,7 +2750,6 @@ object StreamQueries {
     * of batch boundaries. This is the production auto-ingest shape: each
     * periodic run pays for new data only, exactly-once. */
   private def qs9(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val root = graft.util.TempDirs.create("graft-stream-ingest")
     val src = root.resolve("src"); Files.createDirectories(src)
     val ckpt = root.resolve("ckpt").toString

@@ -99,6 +99,8 @@ object ArtiType {
   * uses schema metadata (types/pyarrow.py:260-270).
   */
 object SparkTypeSystem {
+  import scala.reflect.runtime.universe.{Type, TypeTag, typeTag}
+
   import ArtiType._
 
   val CollectionMetaKey = "graft.collection"
@@ -251,13 +253,27 @@ object SparkTypeSystem {
     * structs, Seq/Map → containers), so inverting that through
     * [[fieldToArti]] yields the ArtiType declaration for free — no
     * hand-built AStruct per artifact. */
-  def fromEncoder[T <: Product: scala.reflect.runtime.universe.TypeTag](name: String): AStruct = {
-    val schema = org.apache.spark.sql.Encoders.product[T].schema
-    AStruct(name, schema.fields.toSeq.map(f => f.name -> fieldToArti(f)))
+  def fromEncoder[T <: Product: TypeTag](name: String): AStruct = {
+    val tpe = typeTag[T].tpe
+    val cls = typeTag[T].mirror.runtimeClass(tpe)
+    val fields = productFields.getOrElse(cls, Nil).collectFirst { case (t, fs) if t =:= tpe => fs }
+      .getOrElse {
+        val fs = org.apache.spark.sql.Encoders.product[T].schema.fields.toSeq.map(f => f.name -> fieldToArti(f))
+        productFields.updateWith(cls)(cur => Some((tpe, fs) :: cur.getOrElse(Nil)))
+        fs
+      }
+    AStruct(name, fields)
   }
 
+  /** [[fromEncoder]]'s fields per case class, derived once: they are a pure
+    * function of the type, and a warm `Encoders.product` derivation costs
+    * about a millisecond. Keyed by runtime class, then matched by type
+    * equivalence, so `Box[Int]` and `Box[String]` never share an entry. */
+  private val productFields =
+    scala.collection.concurrent.TrieMap.empty[Class[_], List[(Type, Seq[(String, ArtiType)])]]
+
   /** Table-shaped derivation: Collection of the case class's Struct. */
-  def collectionOf[T <: Product: scala.reflect.runtime.universe.TypeTag](
+  def collectionOf[T <: Product: TypeTag](
       name: String,
       partitionBy: Seq[String] = Nil,
       clusterBy: Seq[String] = Nil): ACollection =

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.{Files, Path}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -94,6 +96,30 @@ class ContentHashSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fp !== Fingerprint.identity)
   }
 
+  test("the driver pass hashes files on several threads and equals the cluster path") {
+    spark.sparkContext.hadoopConfiguration.set("fs.hashrec.impl", classOf[ThreadRecordingFileSystem].getName)
+    // 8 partitions of 3 files; every partition holds the same names at the
+    // same sizes, so only the bytes tell them apart
+    val roots = (0 until 8).map { i =>
+      val root = dir.resolve(s"parallel/$i")
+      Files.createDirectories(root)
+      (0 until 3).foreach(j => Files.write(root.resolve(f"part-$j%05d.bin"), f"p$i%02d-f$j-${"x" * 4000}".getBytes))
+      root
+    }
+    val parts = roots.map(r => StoragePartition(s"hashrec://$r", Map.empty))
+    ThreadRecordingFileSystem.threads.clear()
+    ThreadRecordingFileSystem.opens.set(0)
+    val driver = ContentHash.forPartitions(spark, parts)
+    val driverThreads = ThreadRecordingFileSystem.threads.asScala.toSet
+    spark.conf.set("graft.hash.driverMaxBytes", "0")
+    val cluster = try ContentHash.forPartitions(spark, parts) finally spark.conf.unset("graft.hash.driverMaxBytes")
+    assert(driver === cluster)
+    assert(driver.distinct.size === parts.size)
+    assert(ThreadRecordingFileSystem.opens.get === 2 * 3 * parts.size, "both passes read every file")
+    if (Runtime.getRuntime.availableProcessors() > 1)
+      assert(driverThreads.size > 1, s"driver pass read on $driverThreads")
+  }
+
   test("snapshot-scale batch: many partitions, one job for the large ones") {
     val paths = (0 until 6).map(i => writeParts(s"many/$i", 2))
     val storage = FileStorage(PathTemplate(paths.head, Map.empty))
@@ -105,4 +131,22 @@ class ContentHashSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(fps.distinct.size === parts.size, "each partition's content differs")
     } finally spark.conf.unset("graft.hash.driverMaxBytes")
   }
+}
+
+/** Local files under the `hashrec` scheme, recording the threads that open
+  * them; each open stalls briefly so that concurrent readers overlap. */
+class ThreadRecordingFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getScheme: String = "hashrec"
+  override def getUri: java.net.URI = java.net.URI.create("hashrec:///")
+  override def open(f: org.apache.hadoop.fs.Path, bufferSize: Int): org.apache.hadoop.fs.FSDataInputStream = {
+    ThreadRecordingFileSystem.threads.add(Thread.currentThread().getName)
+    ThreadRecordingFileSystem.opens.incrementAndGet()
+    Thread.sleep(5)
+    super.open(f, bufferSize)
+  }
+}
+
+object ThreadRecordingFileSystem {
+  val threads = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  val opens = new java.util.concurrent.atomic.AtomicInteger
 }

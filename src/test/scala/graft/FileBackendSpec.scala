@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
@@ -187,6 +189,130 @@ class FileBackendSpec extends AnyFunSuite with BeforeAndAfterAll {
       live.readAs[(Long, Double)](spark, b, "by_id").collect().sorted)
     assert(re.readScalar[Double](spark, b2, "total") === 42.0)
     assert(live.readScalar[Double](spark, b, "total") === 42.0)
+  }
+
+  test("a no-op rebuild appends nothing: fresh-backend cycles leave every log byte-identical") {
+    val base = Files.createTempDirectory("graft-fb-noop")
+    Files.createDirectories(base.resolve("tx"))
+    for ((day, id, amount) <- Seq(("1970-01-01", 1, 10.0), ("1970-01-02", 2, 32.0)))
+      Files.writeString(base.resolve("tx").resolve(s"$day.json"),
+        s"""{"id": $id, "date": "$day", "amount": $amount}""")
+    val tx = Artifact(
+      ACollection("transactions",
+        AStruct("tx", Seq("id" -> AInt64(), "date" -> ADate(), "amount" -> AFloat64())),
+        partitionBy = Seq("date")),
+      Format.Json, FileStorage(PathTemplate(s"$base/tx/{date.iso}.json", Map("date" -> "date"))))
+    val daily = Artifact(
+      ACollection("daily", AStruct("d", Seq("date" -> ADate(), "amount" -> AFloat64())), partitionBy = Seq("date")),
+      Format.Parquet, FileStorage(PathTemplate(s"$base/daily/{date.iso}/{input_fingerprint}", Map("date" -> "date"))))
+    val total = Artifact(AFloat64(), Format.Json,
+      FileStorage(PathTemplate(s"$base/total/{input_fingerprint}", Map.empty)))
+    val g = new Graph("noop").add("tx", tx).add("daily", daily).add("total", total)
+      .produce(Producer("daily", build = (_, ins) => Seq(ins.head.select("date", "amount")),
+        map = Producer.mapByKey, computeStatistics = true), Seq("tx"), Seq("daily"))
+      .produce(Producer("total", build = (_, ins) =>
+        Seq(ins.head.agg(sum(col("amount")).as("value")).coalesce(1))), Seq("daily"), Seq("total"))
+      .close()
+    val metaDir = base.resolve("meta")
+    def cycle(): (Fingerprint, graft.exec.BuildReport) = {
+      val b = new FileBackend(metaDir.toString)
+      val (snap, report) = g.build(spark, b)
+      snap.tag(b, "latest")
+      (snap.id, report)
+    }
+    // each log's size and SHA-256: equal iff byte-identical, short to print
+    def logs(): Map[String, (Int, String)] = {
+      val s = Files.list(metaDir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".jsonl")).map { f =>
+        val bytes = Files.readAllBytes(f)
+        val sha = java.security.MessageDigest.getInstance("SHA-256").digest(bytes).map("%02x".format(_)).mkString
+        f.getFileName.toString -> (bytes.length, sha)
+      }.toMap
+      finally s.close()
+    }
+    def projection(id: Fingerprint): Seq[Any] = {
+      val b = new FileBackend(metaDir.toString)
+      Seq("tx", "daily", "total").map { k =>
+        (b.readArtifactPartitions(s"noop/$k"), b.readSnapshotPartitions(id, s"noop/$k"), b.readStatistics(s"noop/$k"))
+      } ++ Seq(b.snapshotForTag("noop", "latest"), b.readGraphModel("noop").map(graft.graph.ModelCodec.encode))
+    }
+    val (id0, r0) = cycle()
+    assert(r0.totalBuilt === 3)
+    val logs0 = logs()
+    assert(logs0.keySet === Set("graphs.jsonl", "snapshots.jsonl", "tags.jsonl", "artifact_parts.jsonl",
+      "snapshot_parts.jsonl", "stats.jsonl", "models.jsonl"))
+    val projection0 = projection(id0)
+    for (i <- 1 to 3) {
+      val (id, r) = cycle()
+      assert(id === id0 && r.totalBuilt === 0 && r.totalSkipped === 3, s"cycle $i")
+      assert(logs() === logs0, s"cycle $i appended to the log")
+      assert(projection(id) === projection0, s"cycle $i")
+    }
+  }
+
+  test("concurrent writers append each record exactly once") {
+    val dir = Files.createTempDirectory("graft-fb-concurrent")
+    val b = new FileBackend(dir.toString)
+    val parts = (0 until 40).map(i => StoragePartition(s"/data/p=$i", Map("p" -> IntField(i)),
+      Fingerprint(i.toLong), Some(Fingerprint(100L + i))))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    implicit val ec: scala.concurrent.ExecutionContext = scala.concurrent.ExecutionContext.fromExecutor(pool)
+    try {
+      val writers = scala.concurrent.Future.traverse((0 until 8).toList) { _ =>
+        scala.concurrent.Future {
+          b.writeGraph("g", Fingerprint(1L))
+          b.writeSnapshot("g", Fingerprint(2L))
+          b.writeGraphModel(graft.graph.GraphModel("g", Nil, Nil))
+          parts.foreach { p =>
+            b.writeArtifactPartitions("g/a", Seq(p, p))
+            b.linkSnapshotPartitions(Fingerprint(2L), "g/a", Seq(p))
+            b.writeStatistics("g/a", p.path, Map("rows" -> "1"))
+          }
+        }
+      }
+      scala.concurrent.Await.result(writers, scala.concurrent.duration.Duration(60, "s"))
+    } finally pool.shutdown()
+    def lines(file: String): Int = Files.readAllLines(dir.resolve(file)).size
+    for (file <- Seq("graphs.jsonl", "snapshots.jsonl", "models.jsonl")) assert(lines(file) === 1, file)
+    for (file <- Seq("artifact_parts.jsonl", "snapshot_parts.jsonl", "stats.jsonl"))
+      assert(lines(file) === parts.size, file)
+    val reopened = new FileBackend(dir.toString)
+    assert(reopened.readArtifactPartitions("g/a").sortBy(_.inputFingerprint.key) === parts)
+    assert(reopened.readSnapshotPartitions(Fingerprint(2L), "g/a").sortBy(_.inputFingerprint.key) === parts)
+    assert(b.readArtifactPartitions("g/a").size === parts.size)
+  }
+
+  test("a live snapshot reads and builds the raw partition written through it") {
+    val base = Files.createTempDirectory("graft-fb-livewrite")
+    val notes = Artifact(
+      ACollection("notes", AStruct("n", Seq("i" -> AInt64(), "value" -> AFloat64())), partitionBy = Seq("i")),
+      Format.Json, FileStorage(PathTemplate(s"$base/notes/i={i}", Map("i" -> "int"))))
+    val total = Artifact(AFloat64(), Format.Json,
+      FileStorage(PathTemplate(s"$base/total/{input_fingerprint}", Map.empty)))
+    def value(v: Double): DataFrame = spark.range(1).selectExpr(s"cast($v as double) as value").coalesce(1)
+    IO.write(value(1.0), Format.Json, notes.storage,
+      notes.storage.generatePartition(Map("i" -> IntField(1)), Fingerprint.identity))
+    val g = new Graph("livewrite").add("notes", notes).add("total", total)
+      .produce(Producer("total", build = (_, ins) =>
+        Seq(ins.head.agg(sum(col("value")).as("value")).coalesce(1))), Seq("notes"), Seq("total"))
+      .close()
+    val metaDir = base.resolve("meta").toString
+    val b = new FileBackend(metaDir)
+    val live = g.snapshot(spark, b)
+    live.write(spark, b, "notes", value(2.0), Map("i" -> IntField(2)))
+    live.tag(b, "v1")
+    val b2 = new FileBackend(metaDir)
+    val re = RehydratedSnapshot.fromTag(b2, "livewrite", "v1")
+    def rows(df: DataFrame): Seq[String] = df.collect().map(_.toString).toSeq.sorted
+    val liveRows = rows(live.read(spark, b, "notes"))
+    assert(liveRows.size === 2)
+    assert(rows(re.read(spark, b2, "notes")) === liveRows)
+    val onlyTwo: graft.partitions.PartitionKey.PartitionKey => Boolean = _.get("i").contains(IntField(2))
+    assert(rows(live.readWhere(spark, b, "notes")(onlyTwo)) === rows(re.readWhere(spark, b2, "notes")(onlyTwo)))
+    assert(rows(live.readWhere(spark, b, "notes")(onlyTwo)).size === 1)
+    // the build consumes the written partition
+    assert(new LocalExecutor(b).build(spark, live).totalBuilt === 1)
+    assert(live.readScalar[Double](spark, b, "total") === 3.0)
   }
 
   test("torn trailing line is ignored; corrupt complete record fails loudly") {

@@ -113,6 +113,16 @@ class PlansSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(p.toLowerCase.contains("minhashsig") || p.contains("graft_minhash"), p)
   }
 
+  test("x126: no Filter evaluates a higher-order function (the shingle lambda runs for pair members only)") {
+    import org.apache.spark.sql.catalyst.expressions.HigherOrderFunction
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    val optimized = Queries.byName("x126_minhash_scorecard").run(spark, sf).queryExecution.optimizedPlan
+    val lambdaFilters = optimized.collectWithSubqueries {
+      case f: Filter if f.condition.exists(_.isInstanceOf[HigherOrderFunction]) => f.condition.sql
+    }
+    assert(lambdaFilters.isEmpty, lambdaFilters.mkString("\n"))
+  }
+
   test("x2: near-dup is equi-joins only — no nested loop, no cartesian") {
     val p = plan("x2_ngram_jaccard")
     assert(!p.contains("NestedLoop"), s"inverted-index join must stay equi:\n$p")

@@ -24,6 +24,11 @@ import org.scalatest.funsuite.AnyFunSuite
   *     `StreamQueries.drainConfs`, and set and restored only by
   *     `StreamQueries.withDrainConfs`'s refcounted override, around every
   *     drain (`runToTable`) and each of qs9's ingest runs;
+  *   - a conf a query leaves behind changes every later query on the
+  *     session, so operators write one session conf at one site (the
+  *     events read's `nanosAsLong`, in Tables), and a streaming query
+  *     writes confs only inside `StreamQueries.withDrainConfs`, which
+  *     restores what it set;
   *   - a live and a rehydrated snapshot read through one implementation:
   *     one `readWhere` and one `readScalar` under graph/. */
 class StructureGateSpec extends AnyFunSuite {
@@ -69,6 +74,26 @@ class StructureGateSpec extends AnyFunSuite {
       assert(sites(roots, "\"" + key + "\"") === Seq("StreamQueries.scala"), key)
       assert(sites(roots, entry).isEmpty, entry)
     }
+  }
+
+  test("operators set one session conf, in Tables; streaming sets confs only in withDrainConfs") {
+    assert(sites(Seq("src/main/scala/graft/operators"), ".conf.set(") === Seq("Tables.scala"))
+    // (file, 0-based line) of every code line under streaming/ that sets a conf
+    val setters = for {
+      f <- scalaFiles("src/main/scala/graft/streaming")
+      (l, i) <- Files.readAllLines(f).asScala.map(_.trim).zipWithIndex
+      if !(l.startsWith("//") || l.startsWith("*") || l.startsWith("/*")) && l.contains(".conf.set(")
+    } yield f.getFileName.toString -> i
+    // withDrainConfs' body: from its def to the first later line that is
+    // not indented past the def
+    val lines = Files.readAllLines(Paths.get("src/main/scala/graft/streaming/StreamQueries.scala")).asScala
+    val start = lines.indexWhere(_.contains("def withDrainConfs["))
+    assert(start >= 0, "withDrainConfs not found")
+    def indent(l: String) = l.takeWhile(_ == ' ').length
+    val end = lines.indexWhere(l => l.trim.nonEmpty && indent(l) <= indent(lines(start)), start + 1)
+    assert(setters.nonEmpty)
+    for ((file, i) <- setters)
+      assert(file == "StreamQueries.scala" && i > start && i < end, s"$file:${i + 1} sets a session conf")
   }
 
   test("one snapshot-read implementation under graph/") {

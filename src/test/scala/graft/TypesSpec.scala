@@ -113,9 +113,25 @@ class TypesSpec extends AnyFunSuite {
       S.collectionOf[TypesSpec.EventRow]("events", partitionBy = Seq("nope"))
     }
   }
+
+  test("fromEncoder derives a case class once, and two types never share a derivation") {
+    import TypesSpec.{Box, V1, V2}
+    val ints = S.fromEncoder[Box[Int]]("a")
+    val strings = S.fromEncoder[Box[String]]("b")
+    assert(ints.fields === Seq("v" -> AInt32()))
+    assert(strings.fields === Seq("v" -> AString(nullable = true)))
+    assert(S.fromEncoder[V1.Row]("r").fields === Seq("id" -> AInt64(), "v" -> AInt32()))
+    assert(S.fromEncoder[V2.Row]("r").fields === Seq("id" -> AInt64(), "v" -> AString(nullable = true)))
+    // a repeated derivation reuses the first one's fields, under any name
+    val again = S.fromEncoder[Box[Int]]("c")
+    assert(again.name === "c" && (again.fields eq ints.fields))
+  }
 }
 
 object TypesSpec {
+  final case class Box[T](v: T)
+  object V1 { final case class Row(id: Long, v: Int) }
+  object V2 { final case class Row(id: Long, v: String) }
   final case class InnerRow(a: Int, b: String)
   final case class EventRow(id: Long, name: String, score: Double,
       when: java.time.LocalDateTime, day: java.time.LocalDate, note: Option[String],
